@@ -1,11 +1,12 @@
 package graft
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expressions.{DotProduct, L2Micros, LevWithin, MinHashSig,
-  ShingleMinHash, ShingleSet, ShingleShaMin, SimhashSig, SortedIntersectSize}
+import graft.expressions._
 
 /** SparkSessionExtensions hook: registers the engine's native expressions in
   * the SQL function registry, so `spark.sql("... vec_dot(a, b) ...")` works
@@ -19,111 +20,65 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.RewriteHofDotProduct)
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "vec_dot(a, b) takes exactly two arguments")
-        DotProduct(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_l2_micros"),
-      new ExpressionInfo(classOf[L2Micros].getName, "vec_l2_micros"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "vec_l2_micros(a, b) takes exactly two arguments")
-        L2Micros(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("lev_within"),
-      new ExpressionInfo(classOf[LevWithin].getName, "lev_within"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "lev_within(a, b, t) takes exactly three arguments")
-        LevWithin(args.head, args(1), intLit(args(2), "lev_within", "t"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "shingle_set(text, n) takes exactly two arguments")
-        ShingleSet(args.head, intLit(args(1), "shingle_set", "n"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "minhash_sig(shingles, k) takes exactly two arguments")
-        MinHashSig(args.head, intLit(args(1), "minhash_sig", "k"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_minhash"),
-      new ExpressionInfo(classOf[ShingleMinHash].getName, "shingle_minhash"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "shingle_minhash(text, n, k) takes exactly three arguments")
-        ShingleMinHash(args.head, intLit(args(1), "shingle_minhash", "n"),
-          intLit(args(2), "shingle_minhash", "k"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_sha_min"),
-      new ExpressionInfo(classOf[ShingleShaMin].getName, "shingle_sha_min"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "shingle_sha_min(text, n) takes exactly two arguments")
-        ShingleShaMin(args.head, intLit(args(1), "shingle_sha_min", "n"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_sig"),
-      new ExpressionInfo(classOf[SimhashSig].getName, "simhash_sig"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "simhash_sig(text, use_md5) takes exactly two arguments")
-        // fold, don't pattern-match on Literal: at injectFunction time the
-        // argument arrives UNFOLDED, so `NOT false`, a cast, or any other
-        // foldable boolean spelling is legitimate SQL (review finding: the
-        // bare-Literal match rejected those with a raw builder exception)
-        val e = args(1)
-        require(e.foldable &&
-            e.dataType == org.apache.spark.sql.types.BooleanType,
-          s"simhash_sig: use_md5 must be a foldable BOOLEAN expression, " +
-            s"got ${e.sql}")
-        val useMd5 = e.eval() match {
-          case b: java.lang.Boolean => b.booleanValue
-          case null => throw new IllegalArgumentException(
-            "simhash_sig: use_md5 must not be NULL — it selects the hash " +
-              "family (a structural parameter of the generated kernel), " +
-              "pass TRUE or FALSE")
-        }
-        SimhashSig(args.head, useMd5)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName,
-        "sorted_intersect_size"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "sorted_intersect_size(a, b) takes exactly two arguments")
-        SortedIntersectSize(args.head, args(1))
-      }))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
 
-  /** Fold a SQL argument that parameterizes a kernel (band width, signature
-    * length, edit threshold) down to the Int the expression constructor
-    * takes. These are STRUCTURAL parameters — they shape the generated
-    * code — so only foldable integer literals are accepted; a column
-    * reference fails loudly at analysis time. */
-  private def intLit(e: Expression, fn: String, arg: String): Int = {
-    require(e.foldable, s"$fn: $arg must be a literal integer")
-    e.eval() match {
-      case i: java.lang.Integer => i.intValue
-      case l: java.lang.Long    => math.toIntExact(l.longValue)
-      case s: java.lang.Short   => s.intValue
-      case b: java.lang.Byte    => b.intValue
+object GraftExtensions {
+
+  /** The SQL surface, one row per function: name, parameter names (which
+    * fix the arity) and builder. The other seven kernels have no SQL
+    * caller, and `BloomProbe`'s bit array is no SQL literal. */
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("vec_dot", "a", "b")(a => DotProduct(a(0), a(1))),
+    fn("vec_l2_micros", "a", "b")(a => L2Micros(a(0), a(1))),
+    fn("lev_within", "a", "b", "t")(a => LevWithin(a(0), a(1), a.int(2))),
+    fn("shingle_set", "text", "n")(a => ShingleSet(a(0), a.int(1))),
+    fn("minhash_sig", "shingles", "k")(a => MinHashSig(a(0), a.int(1))),
+    fn("shingle_minhash", "text", "n", "k")(a => ShingleMinHash(a(0), a.int(1), a.int(2))),
+    fn("shingle_sha_min", "text", "n")(a => ShingleShaMin(a(0), a.int(1))),
+    fn("simhash_sig", "text", "use_md5")(a => SimhashSig(a(0), a.bool(1))),
+    fn("sorted_intersect_size", "a", "b")(a => SortedIntersectSize(a(0), a(1))))
+
+  private def fn[E <: Expression](name: String, params: String*)(build: Args => E)(
+      implicit tag: ClassTag[E]) =
+    (FunctionIdentifier(name), new ExpressionInfo(tag.runtimeClass.getName, name),
+      (args: Seq[Expression]) => build(new Args(name, params, args)): Expression)
+
+  /** The arguments of one SQL call, checked against the row's arity.
+    * Parameters the builder reads with `int`/`bool` are STRUCTURAL — they
+    * shape the generated code — so they must fold to a non-null literal; a
+    * column reference fails loudly at analysis time. They are folded, not
+    * pattern-matched as `Literal`: the argument arrives unfolded, so
+    * `NOT false`, a cast, or any other foldable spelling is legitimate SQL. */
+  private final class Args(fn: String, params: Seq[String], args: Seq[Expression]) {
+    require(args.length == params.length,
+      s"$fn(${params.mkString(", ")}) takes exactly ${params.length} " +
+        s"arguments, got ${args.length}")
+
+    def apply(i: Int): Expression = args(i)
+
+    def int(i: Int): Int = literal(i, "integer") match {
+      case v: java.lang.Integer => v.intValue
+      case v: java.lang.Long    => math.toIntExact(v.longValue)
+      case v: java.lang.Short   => v.intValue
+      case v: java.lang.Byte    => v.intValue
       case other => throw new IllegalArgumentException(
-        s"$fn: $arg must be an integer literal, got $other")
+        s"$fn: ${params(i)} must be an integer literal, got $other")
+    }
+
+    def bool(i: Int): Boolean = literal(i, "BOOLEAN") match {
+      case v: java.lang.Boolean => v
+      case _ => throw new IllegalArgumentException(
+        s"$fn: ${params(i)} must be a BOOLEAN literal, got ${args(i).sql}")
+    }
+
+    private def literal(i: Int, kind: String): Any = {
+      require(args(i).foldable, s"$fn: ${params(i)} must be a literal $kind")
+      val v = args(i).eval()
+      require(v != null, s"$fn: ${params(i)} must not be NULL — it is a " +
+        s"structural parameter of the kernel, pass a $kind")
+      v
     }
   }
 }

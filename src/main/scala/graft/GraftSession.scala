@@ -79,11 +79,8 @@ object GraftSession {
     // too big per partition keep sort-merge. Measured at the 100× fixture:
     // j2_shipping_priority 11.1 → 2.8 s, j14_big_orders 6.3 → 4.8,
     // j20_priority_check 5.6 → 4.7, parity on j13/j16/j18/j7; full-catalog
-    // sweep and oracle re-proven on the flip (round 18). Env seam for
-    // same-session A/B probes (the off-heap pattern); default stays the
-    // flipped value.
-    .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+    // sweep and oracle re-proven on the flip (round 18).
+    .config("spark.sql.join.preferSortMergeJoin", "false")
   }
 
   def local(cores: Int = 32, app: String = "graft"): SparkSession = {

@@ -2,10 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
@@ -33,33 +30,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField,
   * window spelling's isNotNull filter drops, so this expression refuses
   * arrays with null elements loudly rather than guessing.
   */
-case class AdjacentPairs(child: Expression) extends UnaryExpression {
+case class AdjacentPairs(child: Expression)
+    extends UnaryKernel[ArrayData, GenericArrayData](ArrayType(StringType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"adjacent_pairs expects array<string>, got ${t.simpleString}")
-  }
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("w1", StringType, nullable = false),
       StructField("w2", StringType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "adjacent_pairs"
 
-  /** The kernel, shared by interpreted eval and generated code. */
-  def pairsOf(a: ArrayData): GenericArrayData = {
+  def kernel(a: ArrayData): GenericArrayData = {
     val n = a.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](n - 1)
-    var i = 0
     var prev = a.getUTF8String(0)
-    if (prev == null) throw new IllegalArgumentException(
-      "adjacent_pairs: null array element")
+    var i = 0
     while (i < n - 1) {
       val next = a.getUTF8String(i + 1)
-      if (next == null) throw new IllegalArgumentException(
+      if (prev == null || next == null) throw new IllegalArgumentException(
         "adjacent_pairs: null array element")
       out(i) = new GenericInternalRow(Array[Any](prev, next)): InternalRow
       prev = next
@@ -68,19 +57,10 @@ case class AdjacentPairs(child: Expression) extends UnaryExpression {
     new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    pairsOf(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("adjpairs", this, classOf[AdjacentPairs].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.pairsOf($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): AdjacentPairs =
     copy(child = newChild)
 }
 
 object AdjacentPairs {
-  def apply(c: Column): Column =
-    Bridge.column(AdjacentPairs(Bridge.expression(c)))
+  def apply(c: Column): Column = Bridge.column(AdjacentPairs(Bridge.expression(c)))
 }

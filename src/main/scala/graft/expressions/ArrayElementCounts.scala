@@ -2,10 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -25,25 +22,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * (groupBy treats null as a key; tokenizer output never contains null),
   * so like AdjacentPairs this refuses them loudly rather than guessing.
   */
-case class ArrayElementCounts(child: Expression) extends UnaryExpression {
+case class ArrayElementCounts(child: Expression)
+    extends UnaryKernel[ArrayData, GenericArrayData](ArrayType(StringType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"array_element_counts expects array<string>, got ${t.simpleString}")
-  }
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("t", StringType, nullable = false),
       StructField("cnt", LongType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "array_element_counts"
 
-  /** The kernel, shared by interpreted eval and generated code. */
-  def countsOf(a: ArrayData): GenericArrayData = {
+  def kernel(a: ArrayData): GenericArrayData = {
     val n = a.numElements()
-    val counts = new java.util.LinkedHashMap[UTF8String, Array[Long]]()
+    val counts = new Counts
     var i = 0
     while (i < n) {
       val t = a.getUTF8String(i)
@@ -53,25 +44,7 @@ case class ArrayElementCounts(child: Expression) extends UnaryExpression {
       if (slot == null) counts.put(t, Array(1L)) else slot(0) += 1L
       i += 1
     }
-    val out = new Array[Any](counts.size)
-    val it = counts.entrySet().iterator()
-    var j = 0
-    while (it.hasNext) {
-      val e = it.next()
-      out(j) = new GenericInternalRow(
-        Array[Any](e.getKey, e.getValue()(0))): InternalRow
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    countsOf(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("elemcounts", this,
-      classOf[ArrayElementCounts].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countsOf($c);")
+    counts.rows
   }
 
   override protected def withNewChildInternal(
@@ -82,4 +55,24 @@ case class ArrayElementCounts(child: Expression) extends UnaryExpression {
 object ArrayElementCounts {
   def apply(c: Column): Column =
     Bridge.column(ArrayElementCounts(Bridge.expression(c)))
+}
+
+/** Occurrence counts of strings, emitted as `(value, count)` struct rows in
+  * first-occurrence order — deterministic output (order is irrelevant to
+  * every consumer, which re-aggregates, but a deterministic expression must
+  * not depend on hash iteration order). */
+private[expressions] final class Counts
+    extends java.util.LinkedHashMap[UTF8String, Array[Long]] {
+
+  def rows: GenericArrayData = {
+    val out = new Array[Any](size)
+    val it = entrySet().iterator()
+    var j = 0
+    while (it.hasNext) {
+      val e = it.next()
+      out(j) = new GenericInternalRow(Array[Any](e.getKey, e.getValue()(0))): InternalRow
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
 }

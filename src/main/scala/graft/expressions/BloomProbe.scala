@@ -1,11 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All-k-bits-set Bloom membership probe of a string key in one compiled
@@ -30,27 +28,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * and this kernel does the identical thing rather than null-propagating.
   */
 case class BloomProbe(child: Expression, bits: Array[Long], k: Int,
-    seed2: Long) extends UnaryExpression {
+    seed2: Long) extends UnaryKernel[UTF8String, Boolean](StringType) {
 
   require(Integer.bitCount(bits.length * 64) == 1,
     s"m=${bits.length * 64} not a power of two")
   require(k > 0)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bloom_probe expects string, got ${t.simpleString}")
-  }
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
+  override protected def acceptsNull: Boolean = true
   override def prettyName: String = "bloom_probe"
 
-  /** The kernel, shared by interpreted eval and generated code. `s` may
-    * be null (the xxhash64 null-skip above). */
-  def probeOf(s: UTF8String): Boolean = {
+  /** `s` may be null (the xxhash64 null-skip above). */
+  def kernel(s: UTF8String): Boolean = {
     val mMask = bits.length * 64L - 1L
     val h1 = if (s == null) 42L else XxHash64Function.hash(s, StringType, 42L)
-    val h2 = XxHash64Function.hash(seed2, org.apache.spark.sql.types.LongType, h1)
+    val h2 = XxHash64Function.hash(seed2, LongType, h1)
     var i = 0
     while (i < k) {
       val p = (h1 + i.toLong * h2) & mMask
@@ -59,22 +51,6 @@ case class BloomProbe(child: Expression, bits: Array[Long], k: Int,
       i += 1
     }
     true
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    probeOf(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val ref = ctx.addReferenceObj("bloomprobe", this, classOf[BloomProbe].getName)
-    val c = child.genCode(ctx)
-    val newCode = code"""
-      ${c.code}
-      boolean ${ev.isNull} = false;
-      boolean ${ev.value} =
-        $ref.probeOf(${c.isNull} ? null : ${c.value});
-    """
-    ev.copy(code = newCode)
   }
 
   override protected def withNewChildInternal(newChild: Expression): BloomProbe =

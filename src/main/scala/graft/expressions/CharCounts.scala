@@ -2,10 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
@@ -31,85 +28,49 @@ import org.apache.spark.unsafe.types.UTF8String
   * counts — the row set `explode(this)` yields. Empty string → empty
   * array (explode then drops the row, matching the regex path).
   */
-case class CharCounts(child: Expression) extends UnaryExpression {
+case class CharCounts(child: Expression)
+    extends UnaryKernel[UTF8String, GenericArrayData](StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"char_counts expects string, got ${t.simpleString}")
-  }
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("c", StringType, nullable = false),
       StructField("cnt", LongType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "char_counts"
 
-  /** The kernel, shared by interpreted eval and generated code. ASCII
-    * strings (the overwhelming case for a text corpus) count through a
-    * flat 128-slot array — no per-character hashing or boxing; the first
-    * multi-byte character falls back to the general code-point map,
-    * restarted from offset 0 so first-occurrence order is computed over
-    * the whole string. Both paths emit first-occurrence order —
-    * deterministic output (order is irrelevant to every consumer, which
-    * re-aggregates, but a deterministic expression must not depend on
-    * hash iteration order). */
-  def countsOf(s: UTF8String): GenericArrayData = {
+  /** ASCII strings (the overwhelming case for a text corpus) count through
+    * a flat 128-slot array — no per-character hashing or boxing; the first
+    * multi-byte character falls back to counting the string's [[Grams]] of
+    * one character in a [[Counts]] map, restarted from offset 0 so
+    * first-occurrence order is computed over the whole string. Both paths
+    * emit first-occurrence order. */
+  def kernel(s: UTF8String): GenericArrayData = {
     val bytes = s.getBytes
-    val total = bytes.length
     val cnt = new Array[Long](128)
     val order = new Array[Byte](128)
     var nSeen = 0
     var i = 0
-    var ascii = true
-    while (ascii && i < total) {
+    while (i < bytes.length && bytes(i) >= 0) {
       val b = bytes(i)
-      if (b < 0) ascii = false
-      else {
-        if (cnt(b) == 0L) { order(nSeen) = b; nSeen += 1 }
-        cnt(b) += 1L
-        i += 1
-      }
+      if (cnt(b) == 0L) { order(nSeen) = b; nSeen += 1 }
+      cnt(b) += 1L
+      i += 1
     }
-    if (ascii) {
-      val out = new Array[Any](nSeen)
-      var j = 0
-      while (j < nSeen) {
-        val b = order(j)
-        out(j) = new GenericInternalRow(Array[Any](
-          UTF8String.fromBytes(Array(b), 0, 1), cnt(b))): InternalRow
-        j += 1
-      }
-      return new GenericArrayData(out)
+    if (i == bytes.length) return new GenericArrayData(Array.tabulate[Any](nSeen) { j =>
+      val b = order(j)
+      new GenericInternalRow(Array[Any](UTF8String.fromBytes(Array(b)), cnt(b))): InternalRow
+    })
+    val chars = new Grams(bytes, 1)
+    val counts = new Counts
+    var c = 0
+    while (c < chars.count) {
+      val start = chars.start(c)
+      val ch = UTF8String.fromBytes(bytes, start, chars.end(c) - start)
+      val slot = counts.get(ch)
+      if (slot == null) counts.put(ch, Array(1L)) else slot(0) += 1L
+      c += 1
     }
-    val counts = new java.util.LinkedHashMap[UTF8String, Array[Long]]()
-    i = 0
-    while (i < total) {
-      val len = UTF8String.numBytesForFirstByte(bytes(i))
-      val cp = UTF8String.fromBytes(bytes, i, len)
-      val slot = counts.get(cp)
-      if (slot == null) counts.put(cp, Array(1L)) else slot(0) += 1L
-      i += len
-    }
-    val out = new Array[Any](counts.size)
-    val it = counts.entrySet().iterator()
-    var j = 0
-    while (it.hasNext) {
-      val e = it.next()
-      out(j) = new GenericInternalRow(
-        Array[Any](e.getKey, e.getValue()(0))): InternalRow
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    countsOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("charcounts", this, classOf[CharCounts].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countsOf($c);")
+    counts.rows
   }
 
   override protected def withNewChildInternal(newChild: Expression): CharCounts =
@@ -117,6 +78,5 @@ case class CharCounts(child: Expression) extends UnaryExpression {
 }
 
 object CharCounts {
-  def apply(c: Column): Column =
-    Bridge.column(CharCounts(Bridge.expression(c)))
+  def apply(c: Column): Column = Bridge.column(CharCounts(Bridge.expression(c)))
 }

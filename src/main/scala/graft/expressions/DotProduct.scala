@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -18,25 +16,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * side is NULL, if lengths differ, or if any element is NULL.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, java.lang.Double](ArrayType(DoubleType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(e => e.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_dot expects two array<double> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
+  override protected def returnsNull: Boolean = true
   override def prettyName: String = "vec_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def kernel(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var acc = 0.0
@@ -48,26 +34,6 @@ case class DotProduct(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-        final int $n = $x.numElements();
-        if ($n != $y.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          double $acc = 0.0;
-          for (int $i = 0; $i < $n; $i++) {
-            if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-            $acc += $x.getDouble($i) * $y.getDouble($i);
-          }
-          if (!${ev.isNull}) { ${ev.value} = $acc; }
-        }
-      """
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =

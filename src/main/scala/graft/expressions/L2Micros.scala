@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -22,25 +20,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * element is NULL.
   */
 case class L2Micros(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, java.lang.Long](ArrayType(DoubleType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(e => e.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"vec_l2_micros expects two array<double> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
+  override protected def returnsNull: Boolean = true
   override def prettyName: String = "vec_l2_micros"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def kernel(x: ArrayData, y: ArrayData): java.lang.Long = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var acc = 0L
@@ -59,33 +45,6 @@ case class L2Micros(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val v = ctx.freshName("v")
-      val r = ctx.freshName("r")
-      s"""
-        final int $n = $x.numElements();
-        if ($n != $y.numElements()) {
-          ${ev.isNull} = true;
-        } else {
-          long $acc = 0L;
-          for (int $i = 0; $i < $n; $i++) {
-            if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-            final double $d = $x.getDouble($i) - $y.getDouble($i);
-            final double $v = $d * $d * 1.0e6;
-            long $r = (long) $v;
-            if ($v < 9.223372036854776e18 && $v - $r >= 0.5) $r += 1L;
-            $acc += $r;
-          }
-          if (!${ev.isNull}) { ${ev.value} = $acc; }
-        }
-      """
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2Micros =

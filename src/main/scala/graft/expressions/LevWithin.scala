@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,19 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * multi-byte text matches the built-in, not UTF-16 code units.
   */
 case class LevWithin(left: Expression, right: Expression, t: Int)
-    extends BinaryExpression {
+    extends BinaryKernel[UTF8String, Int](StringType) {
 
   require(t >= 0, s"threshold must be >= 0, got $t")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"lev_within expects (string, string), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "lev_within"
 
   private def codePoints(s: UTF8String): Array[Int] = {
@@ -55,16 +45,16 @@ case class LevWithin(left: Expression, right: Expression, t: Int)
     out
   }
 
-  /** The banded kernel, shared by interpreted eval and generated code.
-    * ASCII inputs (the overwhelming case for the blocked-verify corpora)
-    * take a zero-allocation path: bytes ARE code points, so the DP indexes
+  /** The banded kernel. ASCII inputs (the overwhelming case for the
+    * blocked-verify corpora) take a zero-allocation path: bytes ARE code
+    * points, so the DP indexes
     * `UTF8String.getByte` directly — no `toString`, no code-point arrays —
     * and the two band rows come from a per-thread scratch buffer instead
     * of two fresh allocations per pair. At the 100× routed row the kernel
     * runs ~4×10⁸ times and the per-call garbage (String + char[] + 2×int[]
     * per side) was the verify stage's dominant allocation churn. The
     * non-ASCII path keeps the original array spelling bit-for-bit. */
-  def distWithin(ls: UTF8String, rs: UTF8String): Int =
+  def kernel(ls: UTF8String, rs: UTF8String): Int =
     if (ls.isFullAscii && rs.isFullAscii) distAscii(ls, rs)
     else distGeneric(codePoints(ls), codePoints(rs))
 
@@ -158,14 +148,6 @@ case class LevWithin(left: Expression, right: Expression, t: Int)
       i += 1
     }
     if (prev(m) <= t) prev(m) else -1
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    distWithin(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("levw", this, classOf[LevWithin].getName)
-    nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.distWithin($l, $r);")
   }
 
   override protected def withNewChildrenInternal(

@@ -2,11 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
@@ -35,57 +31,40 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * lands in bucket 0 of every table (LshTableBucketsSpec pins all three).
   */
 case class LshTableBuckets(child: Expression, tables: Int,
-    planesPerTable: Int, dim: Int) extends UnaryExpression {
+    planesPerTable: Int, dim: Int)
+    extends UnaryKernel[ArrayData, GenericArrayData](ArrayType(DoubleType)) {
 
   require(tables > 0 && planesPerTable > 0 && planesPerTable <= 63)
 
   @transient private lazy val planes: Array[Array[Double]] =
     graft.functions.VectorFunctions.hyperplanes(tables * planesPerTable, dim)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"lsh_table_buckets expects array<double>, got ${t.simpleString}")
-  }
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("t", IntegerType, nullable = false),
       StructField("b", LongType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = false
+  override protected def acceptsNull: Boolean = true
   override def prettyName: String = "lsh_table_buckets"
 
-  private def zeroBuckets: GenericArrayData = {
-    val out = new Array[Any](tables)
-    var t = 0
-    while (t < tables) {
-      out(t) = new GenericInternalRow(Array[Any](t, 0L)): InternalRow
-      t += 1
+  /** `vArr` may be null (the null-vector quirk above). */
+  def kernel(vArr: ArrayData): GenericArrayData = {
+    // null unless the vector is clean: non-null, dim long, no null element
+    var v = if (vArr != null && vArr.numElements() == dim) new Array[Double](dim) else null
+    var d = 0
+    while (v != null && d < dim) {
+      if (vArr.isNullAt(d)) v = null else v(d) = vArr.getDouble(d)
+      d += 1
     }
-    new GenericArrayData(out)
-  }
-
-  /** The kernel, shared by interpreted eval and generated code. `vArr`
-    * may be null (the null-vector quirk above). */
-  def bucketsOf(vArr: ArrayData): GenericArrayData = {
-    if (vArr == null) return zeroBuckets
-    val n = vArr.numElements()
     val out = new Array[Any](tables)
-    var clean = n == dim
-    var i = 0
-    while (clean && i < n) { clean = !vArr.isNullAt(i); i += 1 }
-    if (!clean) return zeroBuckets
-    val v = new Array[Double](dim)
-    i = 0
-    while (i < dim) { v(i) = vArr.getDouble(i); i += 1 }
     var t = 0
     while (t < tables) {
       var b = 0L
       var p = 0
-      while (p < planesPerTable) {
+      while (v != null && p < planesPerTable) {
         val w = planes(t * planesPerTable + p)
         var acc = 0.0
-        var d = 0
+        d = 0
         while (d < dim) { acc += v(d) * w(d); d += 1 }
         if (acc > 0) b |= 1L << p
         p += 1
@@ -94,23 +73,6 @@ case class LshTableBuckets(child: Expression, tables: Int,
       t += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def eval(input: InternalRow): Any =
-    bucketsOf(child.eval(input).asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lshtb", this,
-      classOf[LshTableBuckets].getName)
-    val c = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    val newCode = code"""
-      ${c.code}
-      boolean ${ev.isNull} = false;
-      $javaType ${ev.value} =
-        $ref.bucketsOf(${c.isNull} ? null : ${c.value});
-    """
-    ev.copy(code = newCode)
   }
 
   override protected def withNewChildInternal(

@@ -1,11 +1,8 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -18,66 +15,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `explode → xxhash64 → k × min-agg` formulation, which pushed one row per
   * shingle through a 64-buffer hash aggregate). Here the signature never
   * leaves the scan projection: no explode, no aggregation state, no shuffle.
-  *
-  * Codegen: `doGenCode` emits a single virtual call into [[signatureOf]]
-  * (the compiled fold loop) via a reference object, so the host projection
-  * stays inside one whole-stage-codegen span — unlike `CodegenFallback`,
-  * which forces the row through the interpreted `eval` path and splits the
-  * scan stage.
   */
 case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[ArrayData, GenericArrayData](ArrayType(StringType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig expects array<string>, got ${t.simpleString}")
-  }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "minhash_sig"
 
-  @transient private lazy val (as, bs): (Array[Long], Array[Long]) = {
-    def splitmix64(seed: Long): Long = {
-      var z = seed + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    ((0 until k).map(i => splitmix64(2L * i) | 1L).toArray,
-      (0 until k).map(i => splitmix64(2L * i + 1)).toArray)
-  }
+  @transient private lazy val slots = new MinHashSlots(k)
 
-  /** The fold kernel, shared by interpreted eval and generated code. */
-  def signatureOf(arr: ArrayData): GenericArrayData = {
-    val n = arr.numElements()
-    val mins = Array.fill(k)(Long.MaxValue)
+  def kernel(arr: ArrayData): GenericArrayData = {
+    val mins = slots.empty
     var j = 0
-    while (j < n) {
+    while (j < arr.numElements()) {
       // null elements fold the seed itself — xxhash64's semantics for a
       // null input — so arrays with containsNull=true are handled, not UB
       val h = if (arr.isNullAt(j)) 42L else {
         val s = arr.getUTF8String(j)
         XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
       }
-      var i = 0
-      while (i < k) {
-        val v = h * as(i) + bs(i)
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
+      slots.fold(h, mins)
       j += 1
     }
     new GenericArrayData(mins)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    signatureOf(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mhsig", this, classOf[MinHashSig].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.signatureOf($c);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =

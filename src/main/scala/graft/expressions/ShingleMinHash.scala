@@ -2,11 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -42,104 +39,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * staged form.
   */
 case class ShingleMinHash(child: Expression, n: Int, k: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, InternalRow](StringType) {
 
   require(n > 0, s"shingle length must be positive, got $n")
   require(k > 0, s"signature size must be positive, got $k")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingle_minhash expects string, got ${t.simpleString}")
-  }
   override def dataType: DataType = StructType(Seq(
     StructField("sz", IntegerType, nullable = false),
     StructField("mh", ArrayType(LongType, containsNull = false),
       nullable = false)))
-  override def nullable: Boolean = true
+  override protected def returnsNull: Boolean = true
   override def prettyName: String = "shingle_minhash"
 
-  // same universal-hash schedule as MinHashSig — bit-identity depends on it
-  @transient private lazy val (as, bs): (Array[Long], Array[Long]) = {
-    def splitmix64(seed: Long): Long = {
-      var z = seed + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    ((0 until k).map(i => splitmix64(2L * i) | 1L).toArray,
-      (0 until k).map(i => splitmix64(2L * i + 1)).toArray)
-  }
+  @transient private lazy val slots = new MinHashSlots(k)
 
-  /** The kernel, shared by interpreted eval and generated code. Returns
-    * null when the string has fewer than n characters. */
-  def sigOf(s: UTF8String): InternalRow = {
-    val bytes = s.getBytes
-    val total = bytes.length
-    // char start offsets (UTF-8 sequence starts); offsets(numChars) = total
-    val offsets = new Array[Int](total + 1)
-    var numChars = 0
-    var i = 0
-    while (i < total) {
-      offsets(numChars) = i
-      i += UTF8String.numBytesForFirstByte(bytes(i))
-      numChars += 1
-    }
-    offsets(numChars) = total
-    if (numChars < n) return null
-    val nGrams = numChars - n + 1
-    // open-addressed distinct table over gram hashes (0 via sentinel flag).
-    // Capacity math in Long: for ~2^30-char inputs `nGrams * 2` overflows
-    // Int, which would leave the table undersized and turn the probe loop
-    // below into an unbounded spin once it fills. Inputs needing a table
-    // beyond 2^30 slots (an 8 GiB single document) are rejected loudly.
-    var capL = 4L
-    while (capL < 2L * nGrams) capL <<= 1
-    if (capL > (1L << 30)) throw new IllegalArgumentException(
-      s"shingle_minhash: document with $nGrams grams exceeds the 2^30-slot " +
-        "dedup table; split the document before signing")
-    val cap = capL.toInt
-    val table = new Array[Long](cap)
-    val mask = cap - 1
-    var zeroSeen = false
-    var sz = 0
-    val mins = Array.fill(k)(Long.MaxValue)
-    var c = 0
-    while (c < nGrams) {
-      val start = offsets(c)
-      val h = XXH64.hashUnsafeBytes(
-        bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + start,
-        offsets(c + n) - start, 42L)
-      var fresh = false
-      if (h == 0L) {
-        if (!zeroSeen) { zeroSeen = true; fresh = true }
-      } else {
-        var idx = (h & mask).toInt
-        while (table(idx) != 0L && table(idx) != h) idx = (idx + 1) & mask
-        if (table(idx) == 0L) { table(idx) = h; fresh = true }
-      }
-      if (fresh) {
-        sz += 1
-        var j = 0
-        while (j < k) {
-          val v = h * as(j) + bs(j)
-          if (v < mins(j)) mins(j) = v
-          j += 1
-        }
-      }
-      c += 1
-    }
+  def kernel(s: UTF8String): InternalRow = {
+    val grams = new Grams(s.getBytes, n)
+    if (grams.count == 0) return null
+    val mins = slots.empty
+    val sz = grams.distinct(prettyName)((h, _, _) => slots.fold(h, mins))
     new GenericInternalRow(Array[Any](sz, new GenericArrayData(mins)))
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    sigOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shmh", this, classOf[ShingleMinHash].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.sigOf($c);
-      ${ev.isNull} = ${ev.value} == null;""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleMinHash =

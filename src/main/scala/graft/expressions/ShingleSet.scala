@@ -1,9 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -22,54 +20,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * e4_fingerprint before the swap (~4 s of a ~5 s query at sf0.1).
   */
 case class ShingleSet(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, GenericArrayData](StringType) {
 
   require(n > 0, s"shingle length must be positive, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingle_set expects string, got ${t.simpleString}")
-  }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "shingle_set"
 
-  /** The kernel, shared by interpreted eval and generated code. */
-  def shinglesOf(s: UTF8String): GenericArrayData = {
-    val bytes = s.getBytes
-    val total = bytes.length
-    // char start offsets (UTF-8 sequence starts); offsets(numChars) = total
-    val offsets = new Array[Int](total + 1)
-    var numChars = 0
-    var i = 0
-    while (i < total) {
-      offsets(numChars) = i
-      i += UTF8String.numBytesForFirstByte(bytes(i))
-      numChars += 1
+  def kernel(s: UTF8String): GenericArrayData = {
+    val grams = new Grams(s.getBytes, n)
+    val seen = new java.util.LinkedHashSet[UTF8String](grams.count * 2)
+    var g = 0
+    while (g < grams.count) {
+      val start = grams.start(g)
+      seen.add(UTF8String.fromBytes(grams.bytes, start, grams.end(g) - start))
+      g += 1
     }
-    offsets(numChars) = total
-    if (numChars < n) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[UTF8String](numChars * 2)
-    var c = 0
-    while (c <= numChars - n) {
-      val start = offsets(c)
-      seen.add(UTF8String.fromBytes(bytes, start, offsets(c + n) - start))
-      c += 1
-    }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    shinglesOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shset", this, classOf[ShingleSet].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.shinglesOf($c);")
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleSet =

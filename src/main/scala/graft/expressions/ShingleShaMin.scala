@@ -1,11 +1,11 @@
 package graft.expressions
 
+import java.security.MessageDigest
+import java.util.{Arrays, HexFormat}
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * materializes one `UTF8String` per shingle, one 64-char hex string per
   * shingle, and an explode row per shingle, then min-aggregates over hex
   * STRINGS — at a 50k-doc fixture that is ~10⁸ short-lived allocations for
-  * a result that is 72 bytes per doc. This kernel walks UTF-8 char offsets
-  * (the [[ShingleMinHash]] scan), dedups grams through the same
-  * open-addressed XXH64 table, computes SHA-256 only for table-fresh grams
+  * a result that is 72 bytes per doc. This kernel walks the string's
+  * [[Grams]] and dedups them through the XXH64 table [[ShingleMinHash]]
+  * uses ([[Grams.distinct]]), computes SHA-256 only for table-fresh grams
   * on a reused MessageDigest, and keeps the running minimum DIGEST
   * (unsigned byte-lexicographic — identical ordering to the lowercase-hex
   * string comparison, since hex encoding is monotone in the byte value).
@@ -38,105 +38,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * form's explode simply drops such docs; callers filter nulls.
   */
 case class ShingleShaMin(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends UnaryKernel[UTF8String, InternalRow](StringType) {
 
   require(n > 0, s"shingle length must be positive, got $n")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"shingle_sha_min expects string, got ${t.simpleString}")
-  }
   override def dataType: DataType = StructType(Seq(
     StructField("fp", StringType, nullable = false),
     StructField("sz", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
+  override protected def returnsNull: Boolean = true
   override def prettyName: String = "shingle_sha_min"
 
-  private val hexDigits = "0123456789abcdef".toCharArray
-
-  /** The kernel, shared by interpreted eval and generated code. */
-  def fpOf(s: UTF8String): InternalRow = {
-    val bytes = s.getBytes
-    val total = bytes.length
-    val offsets = new Array[Int](total + 1)
-    var numChars = 0
-    var i = 0
-    while (i < total) {
-      offsets(numChars) = i
-      i += UTF8String.numBytesForFirstByte(bytes(i))
-      numChars += 1
-    }
-    offsets(numChars) = total
-    if (numChars < n) return null
-    val nGrams = numChars - n + 1
-    // the ShingleMinHash dedup table, same Long-capacity overflow guard
-    var capL = 4L
-    while (capL < 2L * nGrams) capL <<= 1
-    if (capL > (1L << 30)) throw new IllegalArgumentException(
-      s"shingle_sha_min: document with $nGrams grams exceeds the 2^30-slot " +
-        "dedup table; split the document before fingerprinting")
-    val cap = capL.toInt
-    val table = new Array[Long](cap)
-    val mask = cap - 1
-    var zeroSeen = false
-    var sz = 0
-    val md = java.security.MessageDigest.getInstance("SHA-256")
+  def kernel(s: UTF8String): InternalRow = {
+    val grams = new Grams(s.getBytes, n)
+    if (grams.count == 0) return null
+    val md = MessageDigest.getInstance("SHA-256")
     var min: Array[Byte] = null
-    var c = 0
-    while (c < nGrams) {
-      val start = offsets(c)
-      val len = offsets(c + n) - start
-      val h = XXH64.hashUnsafeBytes(
-        bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + start,
-        len, 42L)
-      var fresh = false
-      if (h == 0L) {
-        if (!zeroSeen) { zeroSeen = true; fresh = true }
-      } else {
-        var idx = (h & mask).toInt
-        while (table(idx) != 0L && table(idx) != h) idx = (idx + 1) & mask
-        if (table(idx) == 0L) { table(idx) = h; fresh = true }
-      }
-      if (fresh) {
-        sz += 1
-        md.reset()
-        md.update(bytes, start, len)
-        val d = md.digest()
-        if (min == null || unsignedLess(d, min)) min = d
-      }
-      c += 1
-    }
-    val hex = new Array[Char](64)
-    var b = 0
-    while (b < 32) {
-      hex(2 * b) = hexDigits((min(b) >> 4) & 0xf)
-      hex(2 * b + 1) = hexDigits(min(b) & 0xf)
-      b += 1
+    val sz = grams.distinct(prettyName) { (_, start, end) =>
+      md.update(grams.bytes, start, end - start)
+      val d = md.digest()
+      if (min == null || Arrays.compareUnsigned(d, min) < 0) min = d
     }
     new GenericInternalRow(Array[Any](
-      UTF8String.fromString(new String(hex)), sz))
-  }
-
-  private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    while (i < a.length) {
-      val x = a(i) & 0xff
-      val y = b(i) & 0xff
-      if (x != y) return x < y
-      i += 1
-    }
-    false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    fpOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shsha", this, classOf[ShingleShaMin].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $ref.fpOf($c);
-      ${ev.isNull} = ${ev.value} == null;""")
+      UTF8String.fromString(HexFormat.of().formatHex(min)), sz))
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleShaMin =

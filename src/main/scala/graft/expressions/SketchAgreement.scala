@@ -1,9 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType}
 
 /** Count of positionally-equal bytes of two `array<tinyint>` signature
@@ -18,29 +18,19 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType}
   * curve (317 s vs ~130 s expected) because hot band buckets enumerate far
   * more pairs than survive the filter. This kernel is one fused byte loop,
   * no allocation, and keeps the join-condition evaluation inside
-  * whole-stage codegen (same single-virtual-call pattern as
-  * [[SortedIntersectSize]]).
+  * whole-stage codegen (the [[Kernel]] shape).
   *
   * Length mismatch (impossible for same-`numHashes` sketches) counts only
   * the common prefix; a null ELEMENT (impossible for sketches built by
   * `transform(mh, cast)` over non-null slots) never matches.
   */
 case class SketchAgreement(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, Int](ArrayType(ByteType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ByteType, _), ArrayType(ByteType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sketch_agreement expects (array<tinyint>, array<tinyint>), " +
-          s"got (${l.simpleString}, ${r.simpleString})")
-    }
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "sketch_agreement"
 
-  def countOf(a: ArrayData, b: ArrayData): Int = {
+  def kernel(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0; var c = 0
     while (i < n) {
@@ -51,24 +41,12 @@ case class SketchAgreement(left: Expression, right: Expression)
     c
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    countOf(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("skagree", this,
-      classOf[SketchAgreement].getName)
-    nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.countOf($l, $r);")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SketchAgreement =
     copy(left = newLeft, right = newRight)
 }
 
 object SketchAgreement {
-  def apply(l: org.apache.spark.sql.Column,
-      r: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      SketchAgreement(org.apache.spark.sql.graftbridge.Bridge.expression(l),
-        org.apache.spark.sql.graftbridge.Bridge.expression(r)))
+  def apply(l: Column, r: Column): Column =
+    Bridge.column(SketchAgreement(Bridge.expression(l), Bridge.expression(r)))
 }

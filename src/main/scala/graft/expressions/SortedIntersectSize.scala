@@ -1,9 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
 /** `|A ∩ B|` of two LEXICOGRAPHICALLY SORTED, duplicate-free
@@ -18,33 +18,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * same ordering `array_sort` applies to strings), no hashing, no
   * allocation. Comparison order matters only for counting, so the count is
   * order-insensitive wrt which side is larger.
-  *
-  * Codegen: same single-virtual-call pattern as [[MinHashSig]] — the host
-  * projection stays one whole-stage span instead of falling back to
-  * interpreted eval.
   */
 case class SortedIntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel[ArrayData, Int](ArrayType(StringType)) {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sorted_intersect_size expects (array<string>, array<string>), " +
-          s"got (${l.simpleString}, ${r.simpleString})")
-    }
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
   override def prettyName: String = "sorted_intersect_size"
 
-  /** The merge kernel, shared by interpreted eval and generated code.
-    * Null elements (legal for `containsNull=true` inputs; `array_sort`
+  /** Null elements (legal for `containsNull=true` inputs; `array_sort`
     * places them LAST for ascending sort) can never be shared set members —
     * a null on either cursor means no further string match is possible, so
     * the merge stops there, matching `array_intersect` (null ∩ null is not
     * a string intersection hit on shingle sets, which never hold nulls). */
-  def countOf(a: ArrayData, b: ArrayData): Int = {
+  def kernel(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0
     while (i < na && j < nb && !a.isNullAt(i) && !b.isNullAt(j)) {
@@ -56,24 +42,12 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     c
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    countOf(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sisize", this,
-      classOf[SortedIntersectSize].getName)
-    nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.countOf($l, $r);")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectSize =
     copy(left = newLeft, right = newRight)
 }
 
 object SortedIntersectSize {
-  def apply(l: org.apache.spark.sql.Column,
-      r: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      SortedIntersectSize(org.apache.spark.sql.graftbridge.Bridge.expression(l),
-        org.apache.spark.sql.graftbridge.Bridge.expression(r)))
+  def apply(l: Column, r: Column): Column =
+    Bridge.column(SortedIntersectSize(Bridge.expression(l), Bridge.expression(r)))
 }

@@ -2,10 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,26 +53,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * statistic is null (size(null) = null since Spark 3.0, aggregate(null)
   * = null).
   */
-case class TokenStats(child: Expression) extends UnaryExpression {
+case class TokenStats(child: Expression)
+    extends UnaryKernel[UTF8String, InternalRow](StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"token_stats expects string, got ${t.simpleString}")
-  }
   override def dataType: DataType = StructType(Seq(
     StructField("n_tokens", LongType, nullable = false),
     StructField("n_unique", LongType, nullable = false),
     StructField("char_sum", LongType, nullable = false),
     StructField("n_bpe", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "token_stats"
 
-  @inline private def isWs(b: Byte): Boolean =
-    b == 0x20.toByte || (b >= 0x09.toByte && b <= 0x0D.toByte)
-
-  /** The kernel, shared by interpreted eval and generated code. */
-  def statsOf(s: UTF8String): InternalRow = {
+  def kernel(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     val total = bytes.length
     // pass 1: whitespace tokens — count, distinct count, char sum
@@ -84,11 +72,11 @@ case class TokenStats(child: Expression) extends UnaryExpression {
     val seen = new java.util.HashSet[UTF8String]()
     var i = 0
     while (i < total) {
-      if (isWs(bytes(i))) i += 1
+      if (Utf8.isSpace(bytes(i))) i += 1
       else {
         val start = i
         var chars = 0L
-        while (i < total && !isWs(bytes(i))) {
+        while (i < total && !Utf8.isSpace(bytes(i))) {
           i += UTF8String.numBytesForFirstByte(bytes(i))
           chars += 1
         }
@@ -125,19 +113,10 @@ case class TokenStats(child: Expression) extends UnaryExpression {
       Array[Any](nTokens, seen.size.toLong, charSum, nBpe))
   }
 
-  override def nullSafeEval(input: Any): Any =
-    statsOf(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokenstats", this, classOf[TokenStats].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.statsOf($c);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): TokenStats =
     copy(child = newChild)
 }
 
 object TokenStats {
-  def apply(c: Column): Column =
-    Bridge.column(TokenStats(Bridge.expression(c)))
+  def apply(c: Column): Column = Bridge.column(TokenStats(Bridge.expression(c)))
 }

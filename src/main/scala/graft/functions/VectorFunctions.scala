@@ -42,18 +42,11 @@ object VectorFunctions {
   /** Deterministic pseudo-random hyperplane weights for cosine-LSH: a
     * splitmix64 stream keyed by (plane, dim), mapped to [-0.5, 0.5). Fully
     * reproducible across runs and engines — no RNG state. */
-  def hyperplanes(numPlanes: Int, dim: Int): Array[Array[Double]] = {
-    def splitmix64(seed: Long): Long = {
-      var z = seed + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
+  def hyperplanes(numPlanes: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(numPlanes, dim) { (p, d) =>
-      val h = splitmix64(p.toLong * 1000003L + d)
+      val h = graft.expressions.SplitMix64(p.toLong * 1000003L + d)
       (h >>> 11).toDouble / (1L << 53).toDouble - 0.5
     }
-  }
 
   /** Sign-bit signature of `v` against `planes` → a bucket id in [0, 2^P).
     * REFERENCE spelling, kept for cross-checking the compiled kernel

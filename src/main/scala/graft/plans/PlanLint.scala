@@ -163,11 +163,11 @@ object PlanLint {
   }
 
   /** Per-row-expensive expressions: one evaluation is a budget, two is a
-    * bug. Custom kernels are recognized by their package. */
+    * bug. Custom kernels are recognized by their shared base type. */
   private def isExpensive(e: Expression): Boolean = e match {
     case _: HigherOrderFunction | _: RegExpExtractAll | _: RegExpReplace |
-        _: StringSplit | _: Sha2 | _: Md5 => true
-    case _ => e.getClass.getName.startsWith("graft.expressions.")
+        _: StringSplit | _: Sha2 | _: Md5 | _: graft.expressions.Kernel => true
+    case _ => false
   }
 
   /** Size estimate of the node's logical twin (Catalyst stats) — crude

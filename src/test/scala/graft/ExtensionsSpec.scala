@@ -100,6 +100,22 @@ class ExtensionsSpec extends SparkSpec {
       spark.sql("SELECT simhash_sig(t, id > 0) FROM ext_docs").collect()
     }
     assert(ec.getMessage.contains("use_md5"), ec.getMessage)
+
+    // the registration table: exactly these nine SQL names resolve to graft
+    // kernels, and a wrong-arity call to each fails at analysis, named
+    val sqlNames = Set("vec_dot", "vec_l2_micros", "lev_within", "shingle_set",
+      "minhash_sig", "shingle_minhash", "shingle_sha_min", "simhash_sig",
+      "sorted_intersect_size")
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(f => Option(f.className).exists(_.startsWith("graft.")))
+      .map(_.name).toSet
+    assert(registered == sqlNames)
+    for (name <- sqlNames; arity <- Seq(1, 4)) {
+      val ea = intercept[Exception] {
+        spark.sql(s"SELECT $name(${Seq.fill(arity)("1").mkString(", ")})")
+      }
+      assert(ea.getMessage.contains(name), ea.getMessage)
+    }
   }
 
   test("optimizer rewrites the HOF dot-product spelling to vec_dot") {

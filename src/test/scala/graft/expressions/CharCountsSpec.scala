@@ -52,6 +52,21 @@ class CharCountsSpec extends SparkSpec {
       s"id ${r.getLong(0)}: length ${r.getInt(1)} != sum ${r.getLong(2)}"))
   }
 
+  test("a truncated UTF-8 tail is one clamped character, not a read past the input") {
+    // Parquet strings and binary→string casts are not UTF-8-validated: c3 a9
+    // is é, and e6 97 are the first two bytes of a three-byte character
+    for (pad <- Seq(0, 5, 28)) {
+      val counts = spark.range(1)
+        .select(explode(charCounts(
+          unhex(lit("61" * pad + "C3A9E697")).cast("string"))).as("e"))
+        .select(hex(col("e.c").cast("binary")), col("e.cnt"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toSet
+      val want = Set("C3A9" -> 1L, "E697" -> 1L) ++
+        (if (pad > 0) Set("61" -> pad.toLong) else Set.empty)
+      assert(counts == want, s"$pad leading a's")
+    }
+  }
+
   test("null text → null, not a crash") {
     import spark.implicits._
     val r = Seq(Tuple1(Option.empty[String])).toDF("text")

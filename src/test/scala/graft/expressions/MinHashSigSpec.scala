@@ -46,7 +46,7 @@ class MinHashSigSpec extends SparkSpec {
 
   test("null elements fold the seed (xxhash64(null) semantics), no crash") {
     val expr = MinHashSig(Bridge.expression(lit(null).cast("array<string>")), k)
-    val withNull = expr.signatureOf(new GenericArrayData(
+    val withNull = expr.kernel(new GenericArrayData(
       Array[Any](UTF8String.fromString("abcde"), null)))
     // folding a null ≡ folding a pseudo-element whose hash is the seed 42
     val as = (0 until k).map { i =>
@@ -58,7 +58,7 @@ class MinHashSigSpec extends SparkSpec {
       }
       (sm(2L * i) | 1L, sm(2L * i + 1))
     }
-    val only = expr.signatureOf(new GenericArrayData(
+    val only = expr.kernel(new GenericArrayData(
       Array[Any](UTF8String.fromString("abcde"))))
     (0 until k).foreach { i =>
       val (a, b) = as(i)
@@ -71,7 +71,7 @@ class MinHashSigSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((0L, Seq("abcde", "bcdef"))).toDF("doc_id", "shset")
     val viaPlan = docs.select(MinHashSig(col("shset"), k)).head.getSeq[Long](0)
-    val direct = MinHashSig(Bridge.expression(col("shset")), k).signatureOf(
+    val direct = MinHashSig(Bridge.expression(col("shset")), k).kernel(
       new GenericArrayData(Array[Any](UTF8String.fromString("abcde"),
         UTF8String.fromString("bcdef"))))
     assert(viaPlan == (0 until k).map(direct.getLong))
