@@ -98,6 +98,10 @@ object Tables {
       (build: => DataFrame): DataFrame =
     s.read.parquet(persistedArtifactPath(s, family, key)(build))
 
+  /** The directory a build-once artifact of (`family`, `key`) lives in. */
+  def artifactDir(family: String, key: String): String =
+    s"/tmp/$family/${graft.sources.LocalFs.md5Hex(key)}"
+
   /** [[persistedArtifact]] returning the on-disk PATH instead of a read —
     * for artifacts whose directory LAYOUT is part of the contract (e.g. a
     * `partitionBy` posting store whose serving plan must see the partition
@@ -109,9 +113,8 @@ object Tables {
     // the layout is part of the artifact's identity: the same (family, key)
     // requested with a different partitionBy or format must NOT serve the
     // previously-written directory with the wrong structure
-    val md5 = graft.sources.LocalFs.md5Hex(
+    val path = artifactDir(family,
       s"$key|layout=${partitionBy.mkString(",")}|fmt=$format")
-    val path = s"/tmp/$family/$md5"
     if (!new java.io.File(s"$path/_SUCCESS").exists()) {
       val w = build.write.mode("overwrite").format(format)
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)

@@ -20,8 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * evaluates a (2t+1)-wide band instead of all `m` columns, and the scan
   * stops the moment the band's row minimum exceeds `t` — a random
   * non-match exits after a handful of rows instead of filling n×m cells.
-  * Codepoint-indexed like SQL `levenshtein` (UTF8String semantics), so
-  * multi-byte text matches the built-in, not UTF-16 code units.
+  * Character-indexed like SQL `levenshtein` (UTF8String semantics, lead
+  * bytes stepped on the raw bytes), so multi-byte and malformed text match
+  * the built-in, not UTF-16 code units.
   */
 case class LevWithin(left: Expression, right: Expression, t: Int)
     extends BinaryKernel[UTF8String, Int](StringType) {
@@ -31,15 +32,28 @@ case class LevWithin(left: Expression, right: Expression, t: Int)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "lev_within"
 
-  private def codePoints(s: UTF8String): Array[Int] = {
-    val str = s.toString
-    val n = str.codePointCount(0, str.length)
-    val out = new Array[Int](n)
-    var i = 0; var c = 0
-    while (c < n) {
-      val cp = str.codePointAt(i)
-      out(c) = cp
-      i += Character.charCount(cp)
+  /** The characters of `s` as SQL `levenshtein` steps them: by each lead
+    * byte's sequence length ([[Grams]] with n = 1), so malformed UTF-8 — a
+    * lone continuation byte, a truncated sequence — splits into the same
+    * characters the built-in counts. Each character is keyed by its byte
+    * length and bytes (at most 4), so two keys are equal exactly when the
+    * byte spans are. The built-in compares a truncated last character over
+    * its lead byte's full length, reading past the end of the string (zero
+    * padding in practice); this compares the bytes that exist, so the two
+    * differ only when such a tail meets a character whose extra bytes are
+    * all 0x00. */
+  private def chars(s: UTF8String): Array[Long] = {
+    val g = new Grams(s.getBytes, 1)
+    val out = new Array[Long](g.count)
+    var c = 0
+    while (c < g.count) {
+      var key = (g.end(c) - g.start(c)).toLong << 32
+      var i = g.start(c)
+      while (i < g.end(c)) {
+        key |= (g.bytes(i) & 0xffL) << (8 * (g.end(c) - 1 - i))
+        i += 1
+      }
+      out(c) = key
       c += 1
     }
     out
@@ -53,10 +67,10 @@ case class LevWithin(left: Expression, right: Expression, t: Int)
     * of two fresh allocations per pair. At the 100× routed row the kernel
     * runs ~4×10⁸ times and the per-call garbage (String + char[] + 2×int[]
     * per side) was the verify stage's dominant allocation churn. The
-    * non-ASCII path keeps the original array spelling bit-for-bit. */
+    * non-ASCII path runs the same DP over [[chars]] keys. */
   def kernel(ls: UTF8String, rs: UTF8String): Int =
     if (ls.isFullAscii && rs.isFullAscii) distAscii(ls, rs)
-    else distGeneric(codePoints(ls), codePoints(rs))
+    else distGeneric(chars(ls), chars(rs))
 
   private def distAscii(ls: UTF8String, rs: UTF8String): Int = {
     // DP over the shorter string's columns keeps the band row small
@@ -103,7 +117,7 @@ case class LevWithin(left: Expression, right: Expression, t: Int)
     if (buf(po + m) <= t) buf(po + m) else -1
   }
 
-  private def distGeneric(a: Array[Int], b: Array[Int]): Int = {
+  private def distGeneric(a: Array[Long], b: Array[Long]): Int = {
     // DP over the shorter string's columns keeps the band allocation small
     val (x, y) = if (a.length <= b.length) (b, a) else (a, b)
     val n = x.length; val m = y.length

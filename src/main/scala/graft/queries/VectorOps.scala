@@ -1251,23 +1251,27 @@ object VectorOps {
       org.apache.spark.sql.types.LongType)))
 
   /** The IVF index as it actually lives on disk at scale: posting rows
-    * `(vec_id, v, nrm)` written `partitionBy("cluster")`, so each inverted
-    * list IS a parquet partition directory. Built once per (fixture, params,
-    * code) — the same index-build-time posture as [[persistedQuantizer]] —
-    * with the assignment rule shared with the batch and streaming builds
-    * ([[assignWithVectors]]). Serving ([[ivfStoreTopK]]) then skips every
+    * `(vec_id, v, nrm)` partitioned by `cluster`, so each inverted list IS
+    * a parquet partition directory. Built once per (fixture, params, code)
+    * — the same index-build-time posture as [[persistedQuantizer]] — with
+    * the assignment rule shared with the streaming build
+    * ([[assignWithVectors]]), and published through the append stream's
+    * own landing step as batch −1 (`ingest_batch=-1/cluster=<c>/`): one
+    * store layout, whoever wrote it, and the batch's manifest entry is the
+    * build's completeness mark. Serving ([[ivfStoreTopK]]) then skips every
     * un-probed list at the FILE level via dynamic partition pruning, which
     * is the property that makes an IVF index pay at 100 TB: nprobe/nlist of
     * the corpus is read, not filtered. */
   private[graft] def postingStorePath(s: SparkSession, dir: String,
-      nlist: Int, trainIters: Int): String =
-    Tables.persistedArtifactPath(s, "graft_ivf_store",
+      nlist: Int, trainIters: Int): String = {
+    val path = Tables.artifactDir("graft_ivf_store",
       s"$dir|${Tables.fixtureToken(dir, "embeddings")}" +
-        s"|posting-store|$nlist|$trainIters|v1|${Tables.codeToken(getClass)}",
-      partitionBy = Seq("cluster"))(
+        s"|posting-store|$nlist|$trainIters|v2|${Tables.codeToken(getClass)}")
+    graft.streaming.AnnStreaming.landBatch(s, path, -1L)(
       assignWithVectors(emb(s, dir),
-        persistedTrainedCentroids(s, dir, nlist, trainIters))
-        .select(col("vec_id"), col("v"), col("nrm"), col("cluster")))
+        persistedTrainedCentroids(s, dir, nlist, trainIters)))
+    path
+  }
 
   /** Serve top-k from the ON-DISK partitioned posting store: probe the
     * nprobe nearest centroids per query (broadcast quantizer, tiny), then
@@ -1286,17 +1290,16 @@ object VectorOps {
 
   /** The partitioned-store serving plan against an explicit store PATH —
     * shared by [[ivfStoreTopK]] (batch-built store) and the streaming
-    * append sink's spec (stream-appended store), so both layouts serve
-    * through the identical DPP-pruned plan. `queries` must carry
+    * append sink's spec (stream-appended store), so both serve through the
+    * identical DPP-pruned plan. `queries` must carry
     * `(vec_id, v, nrm)`. The candidate dedup on (q_id, vec_id) also makes
     * serving insensitive to a duplicated posting row — the property that
     * lets an at-least-once append sink serve exact results. */
   private[graft] def serveFromStorePath(s: SparkSession, storePath: String,
       queries: DataFrame, cents: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    // manifest-aware when the store carries one (committed batches only —
-    // readStore enumerates the manifest's explicit ingest_batch directory
-    // paths, so the pruning IS the path list and the DPP-pruned serving
-    // plan below is unchanged); byte-identical plain read otherwise
+    // committed batches only: readStore enumerates the manifest's explicit
+    // ingest_batch directory paths, so that pruning IS the path list and
+    // DPP still prunes the cluster partitions below it
     val store = graft.streaming.AnnStreaming.readStore(s, storePath)
     val probeTop = OrderedOps.topKPerGroup(centScored(queries, cents),
         Seq("vec_id"), Seq(col("c_cos").desc, col("c_id")), nprobe)

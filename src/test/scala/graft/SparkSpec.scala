@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session, lazy). */
@@ -18,8 +19,27 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** This suite's temp root: one directory per suite, created on first
+    * use and deleted after the suite. */
+  private lazy val suiteTmp: java.nio.file.Path = {
+    tmpUsed = true
+    java.nio.file.Files.createTempDirectory(s"graft_${getClass.getSimpleName}_")
+  }
+  @volatile private var tmpUsed = false
+
+  /** A fresh directory under this suite's temp root. */
+  def tempDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(suiteTmp, tag).toString
+
+  override def afterAll(): Unit =
+    try {
+      if (tmpUsed) org.apache.commons.io.FileUtils
+        .deleteDirectory(suiteTmp.toFile)
+    } finally super.afterAll()
+
   def resource(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
 

@@ -13,7 +13,20 @@ class LevWithinSpec extends SparkSpec {
 
   private def check(pairs: Seq[(String, String)], t: Int): Unit = {
     import spark.implicits._
-    val rows = pairs.toDF("a", "b").select(
+    checkRows(pairs.toDF("a", "b"), t)
+  }
+
+  /** [[check]] over raw bytes: hex pairs cast to string unvalidated, the
+    * way Parquet strings and binary casts reach the kernel. */
+  private def checkHex(pairs: Seq[(String, String)], t: Int): Unit = {
+    import spark.implicits._
+    checkRows(pairs.toDF("a", "b").select(
+      unhex(col("a")).cast("string").as("a"),
+      unhex(col("b")).cast("string").as("b")), t)
+  }
+
+  private def checkRows(df: org.apache.spark.sql.DataFrame, t: Int): Unit = {
+    val rows = df.select(
       levenshtein(col("a"), col("b")).as("ref"),
       graft.expressions.LevWithin(col("a"), col("b"), t).as("got"),
       col("a"), col("b")).collect()
@@ -39,6 +52,12 @@ class LevWithinSpec extends SparkSpec {
       ("日本語テキスト", "日本語テキスト"),
       ("日本語テキスト", "日本誤テキスト"),
       ("xxabcdefgh", "abcdefghxx")), 4)
+    // malformed UTF-8: characters step by lead byte, as the built-in does
+    checkHex(Seq(
+      ("E697E697", "E697"),    // a lead byte swallows the next sequence
+      ("80", "81"),            // lone continuation bytes
+      ("6180", "6181"),
+      ("E697", "E697")), 4)
   }
 
   test("randomized ≡ levenshtein across thresholds") {

@@ -104,10 +104,11 @@ class VectorSpec extends SparkSpec {
       trainIters = 2).collect().toSeq
     assert(batch.nonEmpty)
     assert(store == batch, "store-served top-k must equal the batch plan's")
-    // the layout claim is real: one hive-style directory per inverted list
+    // the layout claim is real: one hive-style directory per inverted
+    // list, inside the build's landing (batch -1)
     val path = VectorOps.postingStorePath(spark, dir, nlist = 16,
       trainIters = 2)
-    val parts = new java.io.File(path).listFiles()
+    val parts = new java.io.File(path, "ingest_batch=-1").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cluster="))
     assert(parts.length > 1,
       s"expected one directory per inverted list under $path")

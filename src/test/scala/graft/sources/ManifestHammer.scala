@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.Path
   *
   * args: <storeDir> <writerId> <nCommits> <foldEvery> <ackFile>
   *
-  * Each landing commits `id -> Some(count)` with `id = writerId*1e6 + seq`
+  * Each landing commits `id -> count` with `id = writerId*1e6 + seq`
   * (writers own disjoint keyspaces), then durably appends `A <id> <count>`
   * to the ack file. Every `foldEvery` landings the writer folds ITS OWN
   * acked range — removes the ids, adds `-(writerId*1e6 + seq+1)` with the
@@ -34,7 +34,7 @@ object ManifestHammer {
     for (seq <- 0 until nCommits) {
       val id = writerId * 1000000L + seq
       val cnt = seq + 1L
-      StoreManifest.commit(fs, store, e => e + (id -> Some(cnt)),
+      StoreManifest.commit(fs, store, e => e + (id -> cnt),
         tornStaleMs = 1000L)
       writeAck(s"A $id $cnt")
       if (foldEvery > 0 && (seq + 1) % foldEvery == 0) {
@@ -42,7 +42,7 @@ object ManifestHammer {
         val foldId = -(writerId * 1000000L + seq + 1)
         val total = (foldStart to seq).map(_ + 1L).sum
         StoreManifest.commit(fs, store,
-          e => e -- ids + (foldId -> Some(total)), tornStaleMs = 1000L)
+          e => e -- ids + (foldId -> total), tornStaleMs = 1000L)
         writeAck(s"F $foldId $total ${ids.mkString(",")}")
         foldStart = seq + 1
       }

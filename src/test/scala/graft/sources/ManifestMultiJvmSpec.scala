@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Multi-PROCESS arbitration for [[StoreManifest.commit]] (round-15 verdict
   * item 4): every in-JVM spec drives torn-slot waits, ABA re-lists and
@@ -20,24 +21,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * writer SIGKILLed mid-flight (torn-version litter + heal pressure).
   * Invariant: the final manifest carries EXACTLY the replay of every acked
   * delta — plus at most one in-flight landing from the killed writer. */
-class ManifestMultiJvmSpec extends AnyFunSuite {
+class ManifestMultiJvmSpec extends SparkSpec {
 
-  private def replayAcks(path: java.nio.file.Path): Map[Long, Option[Long]] = {
+  private def replayAcks(path: java.nio.file.Path): Map[Long, Long] = {
     if (!java.nio.file.Files.exists(path)) return Map.empty
     val lines = scala.jdk.CollectionConverters
       .ListHasAsScala(java.nio.file.Files.readAllLines(path)).asScala
-    lines.foldLeft(Map.empty[Long, Option[Long]]) { (m, line) =>
+    lines.foldLeft(Map.empty[Long, Long]) { (m, line) =>
       line.split(' ') match {
-        case Array("A", id, cnt) => m + (id.toLong -> Some(cnt.toLong))
+        case Array("A", id, cnt) => m + (id.toLong -> cnt.toLong)
         case Array("F", foldId, total, ids) =>
-          m -- ids.split(',').map(_.toLong) + (foldId.toLong -> Some(total.toLong))
+          m -- ids.split(',').map(_.toLong) + (foldId.toLong -> total.toLong)
         case _ => m // torn final line from the killed writer: unacked
       }
     }
   }
 
   private def raceAndVerify(hammerMain: String): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_mjvm")
+    val dir = java.nio.file.Paths.get(tempDir("mjvm"))
     val store = s"$dir/store"
     val java17 = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
@@ -84,9 +85,9 @@ class ManifestMultiJvmSpec extends AnyFunSuite {
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
     val sentinel = 999999999L
     StoreManifest.commit(fs, new Path(store),
-      e => e + (sentinel -> Some(1L)), tornStaleMs = 1000L)
+      e => e + (sentinel -> 1L), tornStaleMs = 1000L)
 
-    val finalEntries = StoreManifest.readEntries(fs, new Path(store)).get
+    val finalEntries = StoreManifest.readEntries(fs, new Path(store))
     def keyspace(w: Long) =
       finalEntries.filter { case (id, _) => math.abs(id) / 1000000L == w }
 

@@ -52,12 +52,7 @@ class IvfDriftSpec extends SparkSpec {
   /** Land the drifted fixture: batch 0 mixed regions, batches 1-3 pure
     * cluster-0 mixture (the drift), batch 4 (newest, stays un-folded) cold. */
   private def buildDriftedStore(): String = {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_ivf_drift").toString + "/store"
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.StoreManifest.bootstrap(fs,
-      new org.apache.hadoop.fs.Path(store))
+    val store = tempDir("drift") + "/store"
     val st = new AnnStreaming.StoreAppendState
     val b0 = (0L until 10L).map(mix) ++
       (10L until 20L).map(coldRegion(_, 1)) ++
@@ -144,12 +139,7 @@ class IvfDriftSpec extends SparkSpec {
   }
 
   test("undrifted store: split is a no-op — quantizer untouched, store untouched, serving byte-identical") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_ivf_nodrift").toString + "/store"
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.StoreManifest.bootstrap(fs,
-      new org.apache.hadoop.fs.Path(store))
+    val store = tempDir("nodrift") + "/store"
     val st = new AnnStreaming.StoreAppendState
     for (b <- 0 to 2) {
       val rows = (0 until 4).flatMap { axis =>

@@ -52,15 +52,7 @@ class IvfMergeSpec extends SparkSpec {
   private def toDf(rows: Seq[(Long, Array[Float])]): DataFrame =
     rows.toDF("vec_id", "embedding")
 
-  private def newStore(tag: String): String = {
-    val store = java.nio.file.Files
-      .createTempDirectory(s"graft_ivf_merge_$tag").toString + "/store"
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.StoreManifest.bootstrap(fs,
-      new org.apache.hadoop.fs.Path(store))
-    store
-  }
+  private def newStore(tag: String): String = tempDir(tag) + "/store"
 
   /** batches 0/1 carry the populations (incl. the cold pair — EARLY, so
     * the fold reaches them); batch 2 (newest, stays un-folded) is pure

@@ -68,7 +68,7 @@ object StoreHammerLander {
 }
 
 /** args: <store> <sleepMs> <stopFile> <ackFile> — folds the store through
-  * the full consolidation protocol (park, verify, CAS swap, vacuum sweep)
+  * the full consolidation protocol (vacuum, fold, verify, CAS swap)
   * in a loop until the stop file appears (or a SIGKILL lands first — the
   * spec's kill target), acking `C <i> <rows>` per completed fold. */
 object StoreHammerConsolidator {

@@ -6,7 +6,7 @@ import graft.SparkSpec
 /** Cross-PROCESS consolidation race for the manifested posting store
   * (round-16 verdict item 6): [[graft.sources.ManifestMultiJvmSpec]] races
   * manifest COMMITS across JVMs; this spec races the full STORE protocol —
-  * a landing stream, a consolidator running fold + park + vacuum sweeps,
+  * a landing stream, a consolidator running vacuum + fold passes,
   * and an integrity reader hammering the vacuum-race retry path
   * ([[AnnStreaming.verifyStoreIntegrity]]) — three real JVMs on one store
   * directory, with a SIGKILL landing wherever the consolidator happens to
@@ -23,13 +23,8 @@ import graft.SparkSpec
 class StoreMultiJvmSpec extends SparkSpec {
 
   test("lander + consolidator(+vacuum) + integrity reader race across three JVMs; SIGKILL mid-protocol loses nothing and serving stays exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_mjvm")
+    val dir = tempDir("mjvm")
     val store = s"$dir/store"
-    // pre-bootstrap so exactly one process owns manifest creation
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.StoreManifest.bootstrap(fs,
-      new org.apache.hadoop.fs.Path(store))
 
     val java17 = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString
@@ -99,7 +94,7 @@ class StoreMultiJvmSpec extends SparkSpec {
     // recover the SIGKILLed consolidator's crash, then full verification.
     // The kill may have landed while its lease heartbeat was fresh — wait
     // out a short staleness window first (recovery refuses to roll back a
-    // LIVE run's parks, and a freshly-killed run is indistinguishable from
+    // LIVE run, and a freshly-killed run is indistinguishable from
     // a live one until its heartbeat ages past the window)
     Thread.sleep(3000)
     AnnStreaming.recoverConsolidation(spark, store, leaseStaleMs = 2500)

@@ -24,8 +24,7 @@ class StreamingAnnSpec extends SparkSpec {
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
 
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_ann").toString
+    val inputDir = tempDir("stream_ann")
     val state = AnnStreaming.emptyState(embRaw)
     val q = AnnStreaming.runIvfIngestStream(spark, inputDir, embRaw.schema,
       state, cents)
@@ -68,10 +67,8 @@ class StreamingAnnSpec extends SparkSpec {
     val cuts = Seq(maxId / 3, 2 * maxId / 3, maxId + 1)
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_annstore_in").toString
-    val storePath = java.nio.file.Files
-      .createTempDirectory("graft_stream_annstore").toString + "/store"
+    val inputDir = tempDir("stream_annstore_in")
+    val storePath = tempDir("stream_annstore") + "/store"
     val state = new AnnStreaming.StoreAppendState
     val q = AnnStreaming.runIvfStoreAppendStream(spark, inputDir,
       embRaw.schema, storePath, state, cents)
@@ -109,7 +106,7 @@ class StreamingAnnSpec extends SparkSpec {
   }
 
   test("streamed store maintenance loop: consolidate batch landings, re-serve byte-identically") {
-    // round-11 verdict item 7. The streamed store's small-file problem is
+    // The streamed store's small-file problem is
     // the BATCH dimension — N ingest_batch= dirs × nlist cluster leaves,
     // each already one file, which per-leaf Compaction can never reduce —
     // so the maintenance loop is consolidateStore (fold all but the
@@ -117,17 +114,14 @@ class StreamingAnnSpec extends SparkSpec {
     // pass over the same live store. Asserted: fewer dirs AND files,
     // identical content, byte-identical serving under the same
     // cluster-partitioned DPP plan, the stream still absorbing afterwards,
-    // and a concurrent reader observing only WHOLE-batch snapshots during
-    // the swap (counts must be full minus a subset of folded batches —
-    // a partially-visible batch would read as any other number).
+    // and a concurrent reader that only ever counts the full store and
+    // never fails a read across the fold.
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val maxId = embRaw.agg(max("vec_id")).head().getLong(0)
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_annstore_compact_in").toString
-    val storePath = java.nio.file.Files
-      .createTempDirectory("graft_annstore_compact").toString + "/store"
+    val inputDir = tempDir("annstore_compact_in")
+    val storePath = tempDir("annstore_compact") + "/store"
     val state = new AnnStreaming.StoreAppendState
     val q = AnnStreaming.runIvfStoreAppendStream(spark, inputDir,
       embRaw.schema, storePath, state, cents)
@@ -150,47 +144,28 @@ class StreamingAnnSpec extends SparkSpec {
       val foldable = (sizes - newest).values.toSeq
       val expectRows = embRaw.count()
       assert(sizes.values.sum == expectRows)
-      val contentBefore = spark.read.parquet(storePath).drop("ingest_batch")
+      val contentBefore = AnnStreaming.readStore(spark, storePath)
         .collect().map(_.toString).sorted.toSeq
       val queries = VectorOps.prepEmb(embRaw).filter(col("vec_id") < nQueries)
         .localCheckpoint()
       val servedBefore = VectorOps.serveFromStorePath(spark, storePath,
         queries, cents, k, nprobe).collect().toSeq
 
-      // concurrent reader: since round 14 every streamed store is
-      // manifested, so the fold is ONE atomic manifest swap and the
-      // engine read's only legal count is the FULL total — strictly
-      // stronger than the old park window's whole-batch subsets
-      val wrong = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val okReads = new java.util.concurrent.atomic.AtomicLong(0L)
-      val stopReader = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val reader = new Thread(() => {
-        val deadline = System.currentTimeMillis + 120000
-        while ((!stopReader.get() || okReads.get() == 0L) &&
-            wrong.get() == -1L && System.currentTimeMillis < deadline) {
-          try {
-            val n = AnnStreaming.readStore(spark, storePath).count()
-            if (n == expectRows) okReads.incrementAndGet()
-            else wrong.compareAndSet(-1L, n)
-          } catch { case _: Throwable => () } // mid-swap re-plan window
-        }
-      })
-      reader.start()
-      val stats = try {
-        AnnStreaming.consolidateStore(spark, storePath)
-      } finally { stopReader.set(true); reader.join(150000) }
+      // concurrent reader: the fold is ONE atomic manifest swap, so the
+      // engine read's only legal count is the FULL total; and the fold's
+      // sources are retained, so no read in flight across it may fail
+      val reader = new StoreReader(spark, storePath, expectRows)
+      val stats = try AnnStreaming.consolidateStore(spark, storePath)
+        finally reader.finish()
 
       assert(!stats.skipped && stats.rows == foldable.sum,
         s"consolidation must fold exactly the older batches: $stats")
       assert(stats.batchDirsAfter == 2 &&
         stats.filesAfter < stats.filesBefore,
         s"expected [consolidated, newest] with fewer files: $stats")
-      assert(wrong.get() == -1L,
-        s"a concurrent reader saw a partial store: ${wrong.get()} rows " +
-          s"(only legal count: $expectRows)")
-      assert(okReads.get() >= 1L, "the concurrent reader never completed a read")
+      reader.check()
       // content (modulo the folded batch ids) and serving are identical
-      val contentAfter = spark.read.parquet(storePath).drop("ingest_batch")
+      val contentAfter = AnnStreaming.readStore(spark, storePath)
         .collect().map(_.toString).sorted.toSeq
       assert(contentAfter == contentBefore,
         "consolidation changed the store's content")
@@ -198,11 +173,16 @@ class StreamingAnnSpec extends SparkSpec {
         queries, cents, k, nprobe).collect().toSeq
       assert(servedAfter == servedBefore,
         "the consolidated store served differently")
+      // the fold's sources stay on disk until the vacuum (recovery, or the
+      // next fold) deletes them
+      assert(batchDirs().length == cuts.length + 1)
+      AnnStreaming.recoverConsolidation(spark, storePath)
+      assert(batchDirs().length == 2)
       // a leaf-level Compaction pass composes with the consolidated layout
       // (here a metadata-only skip — consolidation already wrote compact
       // leaves — but the layout stays valid for it either way)
       val cstats = graft.sources.Compaction.compactParquet(spark, storePath)
-      assert(spark.read.parquet(storePath).count() == expectRows)
+      assert(AnnStreaming.readStore(spark, storePath).count() == expectRows)
       assert(cstats.filesAfter <= stats.filesAfter)
       assert(VectorOps.serveFromStorePath(spark, storePath,
         queries, cents, k, nprobe).collect().toSeq == servedBefore,
@@ -212,127 +192,23 @@ class StreamingAnnSpec extends SparkSpec {
         .withColumn("vec_id", col("vec_id") + maxId + 1)
       extra.write.mode("append").parquet(inputDir)
       q.processAllAvailable()
-      assert(spark.read.parquet(storePath).count() == expectRows + 50,
+      assert(AnnStreaming.readStore(spark, storePath).count() == expectRows + 50,
         "the stream must keep absorbing after consolidation")
     } finally q.stop()
   }
 
-  test("a crashed PRE-UPGRADE consolidation heals at stream start: rollback or sweep, never loss") {
-    // these shapes exercise the LEGACY (no-manifest) recovery branch,
-    // which survives for stores whose park-window consolidation crashed
-    // before the upgrade. The stores are built through absorbStoreBatch
-    // directly — the stream entry point would auto-manifest a fresh store
-    // (round-14 default posture), which is exactly what these states
-    // pre-date.
-    val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
-    val cents = VectorOps
-      .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    def freshStore(): (String, String) = {
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_annstore_heal").toString + "/store"
-      val st = new AnnStreaming.StoreAppendState
-      AnnStreaming.absorbStoreBatch(st,
-        embRaw.filter(col("vec_id") < 100), 0L, store, cents)
-      AnnStreaming.absorbStoreBatch(st,
-        embRaw.filter(col("vec_id") >= 100 && col("vec_id") < 200),
-        1L, store, cents)
-      ("", store)
-    }
-    val total = 200L
-    // shape 1: parked source, NO commit marker for its token (crash
-    // between park and commit) → rollback, store serves every row again
-    val (_, s1) = freshStore()
-    val f1 = new java.io.File(s1, "ingest_batch=0")
-    assert(f1.renameTo(new java.io.File(s1, ".old_tokA.ingest_batch=0")))
-    assert(spark.read.parquet(s1).count() < total, "park must hide the batch")
-    AnnStreaming.recoverConsolidation(spark, s1)
-    assert(spark.read.parquet(s1).count() == total,
-      "rollback must restore the parked batch")
-    // shape 2: parked source AND that run's commit marker inside the live
-    // consolidated landing (crash between commit and cleanup) → sweep the
-    // park, rows stay singular
-    val (_, s2) = freshStore()
-    val src = new java.io.File(s2, "ingest_batch=0")
-    val consolidated = new java.io.File(s2,
-      s"ingest_batch=${AnnStreaming.ConsolidatedBatchId}")
-    // "commit" = the folded copy landed WITH the run's marker: move the
-    // batch there, stamp the token, park a (stale) copy under the same token
-    assert(src.renameTo(consolidated))
-    assert(new java.io.File(consolidated, "_commit_tokB").createNewFile())
-    val parked = new java.io.File(s2, ".old_tokB.ingest_batch=0")
-    assert(parked.mkdir())
-    AnnStreaming.recoverConsolidation(spark, s2)
-    assert(!parked.exists(), "a committed consolidation must sweep its park")
-    assert(spark.read.parquet(s2).count() == total,
-      "sweep must not touch live rows")
-    // shape 3 — THE round-12 data-loss window: a consolidated landing from
-    // a PRIOR run exists (its own marker inside), and a DIFFERENT run's
-    // park holds an un-folded batch (second consolidation crashed mid-park
-    // before reaching the prior -2). Round 12 keyed "committed" on the -2
-    // directory's existence and would sweep the park — deleting rows in no
-    // landing. Token-keyed recovery sees no _commit_tokD inside -2 and
-    // rolls the park back instead: zero loss.
-    val (_, s3) = freshStore()
-    val src3 = new java.io.File(s3, "ingest_batch=0")
-    val cons3 = new java.io.File(s3,
-      s"ingest_batch=${AnnStreaming.ConsolidatedBatchId}")
-    assert(src3.renameTo(cons3)) // prior run's committed -2
-    assert(new java.io.File(cons3, "_commit_tokC").createNewFile())
-    val live3 = new java.io.File(s3, "ingest_batch=1")
-    assert(live3.renameTo(new java.io.File(s3, ".old_tokD.ingest_batch=1")))
-    assert(spark.read.parquet(s3).count() < total,
-      "the adversarial park must hide batch 1")
-    AnnStreaming.recoverConsolidation(spark, s3)
-    assert(spark.read.parquet(s3).count() == total,
-      "a foreign -2 must NOT make recovery sweep another run's park")
-    assert(new java.io.File(s3, "ingest_batch=1").isDirectory,
-      "rollback must restore the parked batch under its own id")
-    // shape 4 — pre-round-13 (TOKEN-LESS) parks next to a live -2: the
-    // old-code run may have COMMITTED (its parks should sweep) or be a
-    // hand-planted fake (its parks should roll back) — no token exists to
-    // prove which, and guessing either way is wrong in the other world
-    // (a blind rollback would duplicate folded rows against the committed
-    // -2; a blind sweep is the r12 loss). Recovery must REFUSE with the
-    // manual resolution, touching nothing (advisory finding, round 13).
-    val (_, s4) = freshStore()
-    val src4 = new java.io.File(s4, "ingest_batch=0")
-    val cons4 = new java.io.File(s4,
-      s"ingest_batch=${AnnStreaming.ConsolidatedBatchId}")
-    assert(src4.renameTo(cons4)) // the "old-code committed -2"
-    val park4 = new java.io.File(s4, ".old_ingest_batch=1") // legacy name
-    assert(new java.io.File(s4, "ingest_batch=1").renameTo(park4))
-    val e4 = intercept[IllegalStateException] {
-      AnnStreaming.recoverConsolidation(spark, s4)
-    }
-    assert(e4.getMessage.contains("token-less"), e4.getMessage)
-    assert(park4.isDirectory && cons4.isDirectory,
-      "the refused recovery must leave the ambiguous store untouched")
-    // shape 5 — a token-less park with NO -2 anywhere is unambiguous (an
-    // old-code run that crashed before its commit, or a hand-planted
-    // park): rollback, as always
-    val (_, s5) = freshStore()
-    val park5 = new java.io.File(s5, ".old_ingest_batch=0")
-    assert(new java.io.File(s5, "ingest_batch=0").renameTo(park5))
-    AnnStreaming.recoverConsolidation(spark, s5)
-    assert(new java.io.File(s5, "ingest_batch=0").isDirectory)
-    assert(spark.read.parquet(s5).count() == total,
-      "the token-less park must roll back when no -2 clouds the picture")
-  }
-
   test("two-cycle consolidation crashes (both orderings) recover with zero row loss") {
-    // round-12 verdict item 1, driven END TO END through the real protocol:
-    // consolidate → stream more batches → consolidate again, killed by the
-    // crashpoint seam at each park boundary and at the commit, then
+    // driven END TO END through the real protocol: consolidate → stream
+    // more batches → consolidate again, killed by the crashpoint seam
+    // before the fold is placed, before its swap and after it, then
     // recovered — asserting zero row loss and byte-identical serving every
     // time. The second run's sources include the FIRST run's committed -2,
-    // which is exactly the shape whose recovery round 12 got wrong.
+    // the shape a recovery keyed on "a -2 exists" would get wrong.
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_annstore_2cycle_in").toString
-    val storePath = java.nio.file.Files
-      .createTempDirectory("graft_annstore_2cycle").toString + "/store"
+    val inputDir = tempDir("annstore_2cycle_in")
+    val storePath = tempDir("annstore_2cycle") + "/store"
     val q = AnnStreaming.runIvfStoreAppendStream(spark, inputDir,
       embRaw.schema, storePath, new AnnStreaming.StoreAppendState, cents)
     try {
@@ -344,25 +220,25 @@ class StreamingAnnSpec extends SparkSpec {
       land(0, 100); land(100, 200)
       // first cycle commits: ids = {-2(batch0 folded), 1}
       assert(!AnnStreaming.consolidateStore(spark, storePath).skipped)
-      assert(AnnStreaming.manifest(spark, storePath).get == Set(-2L, 1L))
+      assert(AnnStreaming.manifest(spark, storePath) == Set(-2L, 1L))
       land(200, 300); land(300, 400)
       var total = 400L
       var hi = 400L
-      assert(spark.read.parquet(storePath).count() == total)
+      assert(AnnStreaming.readStore(spark, storePath).count() == total)
       val queries = VectorOps.prepEmb(embRaw).filter(col("vec_id") < nQueries)
         .localCheckpoint()
       // every second-cycle fold below has the PRIOR cycle's fold id among
-      // its ascending sources — the exact shape whose recovery round 12
-      // got wrong. Kill at each protocol step; a PRE-swap crash ("verified",
-      // "placed") recovers by rolling the fold away, a POST-swap crash
-      // ("manifested", first park) recovers by finishing its cleanup — so
-      // after a post-swap kill a fresh batch re-creates a foldable state.
-      val killAt = Seq("verified", "placed", "manifested", "parked:")
+      // its ascending sources. Kill at each protocol step; a PRE-swap crash
+      // ("verified", "placed") recovers by vacuuming the fold away, a
+      // POST-swap crash ("manifested") is a committed fold whose sources
+      // recovery vacuums — so after it a fresh batch re-creates a foldable
+      // state.
+      val killAt = Seq("verified", "placed", "manifested")
       for (step <- killAt) {
-        while (AnnStreaming.manifest(spark, storePath).get.size < 3) {
+        while (AnnStreaming.manifest(spark, storePath).size < 3) {
           land(hi, hi + 25); hi += 25; total += 25
         }
-        assert(AnnStreaming.manifest(spark, storePath).get.exists(_ < 0),
+        assert(AnnStreaming.manifest(spark, storePath).exists(_ < 0),
           "the second-cycle shape needs a prior fold id among the sources")
         val servedBefore = VectorOps.serveFromStorePath(spark, storePath,
           queries, cents, k, nprobe).collect().toSeq
@@ -375,7 +251,7 @@ class StreamingAnnSpec extends SparkSpec {
         AnnStreaming.consolidateCrashpoint = _ => ()
         assert(e.getMessage.contains("injected crash"))
         AnnStreaming.recoverConsolidation(spark, storePath)
-        assert(spark.read.parquet(storePath).count() == total,
+        assert(AnnStreaming.readStore(spark, storePath).count() == total,
           s"row loss after a crash at '$step'")
         val served = VectorOps.serveFromStorePath(spark, storePath,
           queries, cents, k, nprobe).collect().toSeq
@@ -386,7 +262,7 @@ class StreamingAnnSpec extends SparkSpec {
       // is a no-op skip, and the stream keeps absorbing
       assert(AnnStreaming.consolidateStore(spark, storePath).skipped)
       land(hi, hi + 25)
-      assert(spark.read.parquet(storePath).count() == total + 25,
+      assert(AnnStreaming.readStore(spark, storePath).count() == total + 25,
         "the stream must keep absorbing after the two-cycle recovery")
     } finally {
       AnnStreaming.consolidateCrashpoint = _ => ()
@@ -395,20 +271,18 @@ class StreamingAnnSpec extends SparkSpec {
   }
 
   test("consolidation concurrent with a landing batch loses neither side") {
-    // round-12 verdict item 7: the 100-TB posture is maintenance running
-    // WHILE the stream absorbs. The crashpoint seam doubles as an
-    // interleaving hook: a fresh micro-batch lands inside the park/commit
-    // window (after staging verify, mid-park). The landing must survive
-    // (it is not in the consolidation's source snapshot) and the fold must
-    // commit; whole-batch-snapshot reader visibility is pinned by the
-    // maintenance-loop test above.
+    // the 100-TB posture is maintenance running WHILE the stream absorbs.
+    // The crashpoint seam doubles as an interleaving hook: a fresh
+    // micro-batch lands right after the fold's manifest swap, while the
+    // fold still holds its lease. The landing must survive (it is not in
+    // the consolidation's source snapshot) and the fold must commit;
+    // whole-store reader visibility is pinned by the maintenance-loop
+    // test above.
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_annstore_concur_in").toString
-    val storePath = java.nio.file.Files
-      .createTempDirectory("graft_annstore_concur").toString + "/store"
+    val inputDir = tempDir("annstore_concur_in")
+    val storePath = tempDir("annstore_concur") + "/store"
     val q = AnnStreaming.runIvfStoreAppendStream(spark, inputDir,
       embRaw.schema, storePath, new AnnStreaming.StoreAppendState, cents)
     try {
@@ -420,7 +294,7 @@ class StreamingAnnSpec extends SparkSpec {
       land(0, 100); land(100, 200); land(200, 300)
       var landedInWindow = false
       AnnStreaming.consolidateCrashpoint = s =>
-        if (s == "parked:ingest_batch=0" && !landedInWindow) {
+        if (s == "manifested" && !landedInWindow) {
           landedInWindow = true
           land(300, 400) // a whole micro-batch lands mid-protocol
         }
@@ -429,10 +303,12 @@ class StreamingAnnSpec extends SparkSpec {
       assert(landedInWindow, "the interleaving hook never fired")
       assert(!stats.skipped && stats.rows == 200L,
         s"consolidation must fold exactly its source snapshot: $stats")
-      assert(spark.read.parquet(storePath).count() == 400L,
+      assert(AnnStreaming.readStore(spark, storePath).count() == 400L,
         "the mid-window landing or a folded batch was lost")
-      // dirs now: -2 (batches 0,1), 2 (kept newest of the snapshot),
-      // 3 (landed mid-window)
+      // manifested: -2 (batches 0,1), 2 (kept newest of the snapshot),
+      // 3 (landed mid-window); on disk too once the vacuum took 0 and 1
+      assert(AnnStreaming.manifest(spark, storePath) == Set(-2L, 2L, 3L))
+      AnnStreaming.recoverConsolidation(spark, storePath)
       val names = new java.io.File(storePath).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
         .map(_.getName).sorted.toSeq
@@ -440,7 +316,7 @@ class StreamingAnnSpec extends SparkSpec {
         "ingest_batch=3"), s"unexpected layout: $names")
       // and the stream keeps absorbing on the post-fold layout
       land(400, 450)
-      assert(spark.read.parquet(storePath).count() == 450L)
+      assert(AnnStreaming.readStore(spark, storePath).count() == 450L)
     } finally {
       AnnStreaming.consolidateCrashpoint = _ => ()
       q.stop()
@@ -456,10 +332,8 @@ class StreamingAnnSpec extends SparkSpec {
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
     def freshStream() = {
-      val inputDir = java.nio.file.Files
-        .createTempDirectory("graft_annstore_guard_in").toString
-      val storePath = java.nio.file.Files
-        .createTempDirectory("graft_annstore_guard").toString + "/store"
+      val inputDir = tempDir("annstore_guard_in")
+      val storePath = tempDir("annstore_guard") + "/store"
       (inputDir, storePath,
         AnnStreaming.runIvfStoreAppendStream(spark, inputDir, embRaw.schema,
           storePath, new AnnStreaming.StoreAppendState, cents))
@@ -521,8 +395,7 @@ class StreamingAnnSpec extends SparkSpec {
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_ann_dup").toString
+    val inputDir = tempDir("stream_ann_dup")
     val state = AnnStreaming.emptyState(embRaw)
     val q = AnnStreaming.runIvfIngestStream(spark, inputDir, embRaw.schema,
       state, cents)
@@ -556,8 +429,7 @@ class StreamingAnnSpec extends SparkSpec {
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_ann_intra").toString
+    val inputDir = tempDir("stream_ann_intra")
     val state = AnnStreaming.emptyState(embRaw)
     val q = AnnStreaming.runIvfIngestStream(spark, inputDir, embRaw.schema,
       state, cents)

@@ -5,30 +5,31 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 import graft.queries.VectorOps
 
-/** The committed-batch manifest (round-12 verdict stretch item): the
-  * manifest is the posting store's visibility authority — landings commit
-  * by entering it, torn directories are invisible by rule rather than by
-  * dot-prefix naming, and consolidation becomes ONE atomic manifest swap
-  * (a concurrent reader's only legal row count is the full total,
-  * strictly stronger than the legacy park window's whole-batch subsets).
-  * Serving stays on the identical DPP-pruned plan: the manifested scan
-  * enumerates the manifest's explicit ingest_batch directory paths (the
-  * pruning IS the path list; `cluster` stays a partition column for DPP),
-  * so a fold's vacuum racing an in-flight reader fails that reader's
-  * plan loudly — readStore re-plans against the fresh manifest — instead
-  * of silently dropping the vacuumed directories from a listing. */
+/** The committed-batch manifest: the posting store's visibility authority
+  * from its first landing — landings commit by entering it, torn
+  * directories are invisible by rule rather than by dot-prefix naming, and
+  * consolidation becomes ONE atomic manifest swap (a concurrent reader's
+  * only legal row count is the full total). Fold sources are retained,
+  * un-manifested, until the next fold or recovery pass deletes them, so a
+  * reader planned before one fold still completes after it. Serving stays
+  * on the identical DPP-pruned plan: the manifested scan enumerates the
+  * manifest's explicit ingest_batch directory paths (the pruning IS the
+  * path list; `cluster` stays a partition column for DPP), so a vacuum
+  * racing an in-flight plan fails it loudly — readStore re-plans against
+  * the fresh manifest — instead of silently dropping the vacuumed
+  * directories from a listing. */
 class StreamingManifestSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private val (nlist, trainIters, nQueries, k, nprobe) = (16, 2, 50, 3, 4)
 
-  private def freshPaths(tag: String): (String, String) = {
-    val in = java.nio.file.Files
-      .createTempDirectory(s"graft_manifest_${tag}_in").toString
-    val store = java.nio.file.Files
-      .createTempDirectory(s"graft_manifest_$tag").toString + "/store"
-    (in, store)
-  }
+  private def freshPaths(tag: String): (String, String) =
+    (tempDir(s"${tag}_in"), tempDir(tag) + "/store")
+
+  private def onDisk(store: String): Set[Long] =
+    new java.io.File(store).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
+      .map(_.getName.stripPrefix("ingest_batch=").toLong).toSet
 
   test("manifest bootstrap: landings commit via the manifest, torn dirs are invisible") {
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
@@ -46,20 +47,13 @@ class StreamingManifestSpec extends SparkSpec {
       land(0, 100); land(100, 200)
       val queries = VectorOps.prepEmb(embRaw).filter(col("vec_id") < nQueries)
         .localCheckpoint()
-      val servedLegacy = VectorOps.serveFromStorePath(spark, store,
-        queries, cents, k, nprobe).collect().toSeq
-      // the fresh store was auto-manifested at stream start (round-14
-      // posture); enableManifest is the idempotent migration shim and
-      // must return the current ids without rewriting the counts
-      assert(AnnStreaming.enableManifest(spark, store) == Set(0L, 1L))
-      assert(AnnStreaming.manifestEntries(spark, store).get
-        == Map(0L -> Some(100L), 1L -> Some(100L)),
-        "enableManifest on a manifested store must not wipe its counts")
-      assert(VectorOps.serveFromStorePath(spark, store, queries, cents, k,
-        nprobe).collect().toSeq == servedLegacy)
-      // a landing under the manifest commits by entering it
+      // the fresh store is manifested from its first landing, every batch
+      // with its row count
+      assert(AnnStreaming.manifestEntries(spark, store)
+        == Map(0L -> 100L, 1L -> 100L))
+      // a landing commits by entering the manifest
       land(200, 300)
-      assert(AnnStreaming.manifest(spark, store).get == Set(0L, 1L, 2L))
+      assert(AnnStreaming.manifest(spark, store) == Set(0L, 1L, 2L))
       assert(AnnStreaming.readStore(spark, store).count() == 300L)
       val served300 = VectorOps.serveFromStorePath(spark, store,
         queries, cents, k, nprobe).collect().toSeq
@@ -107,7 +101,6 @@ class StreamingManifestSpec extends SparkSpec {
         q.processAllAvailable()
       }
       land(0, 100); land(100, 200); land(200, 300)
-      AnnStreaming.enableManifest(spark, store)
       val total = 300L
       val queries = VectorOps.prepEmb(embRaw).filter(col("vec_id") < nQueries)
         .localCheckpoint()
@@ -117,38 +110,13 @@ class StreamingManifestSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
 
       // the reader's ONLY legal count is the total — the fold must never
-      // expose a missing-batches intermediate (transient listing errors in
-      // the post-swap cleanup window are retried, as a re-planning reader
-      // would)
-      val wrong = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val okReads = new java.util.concurrent.atomic.AtomicLong(0L)
-      val stopReader = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val reader = new Thread(() => {
-        // under a loaded machine a single count() can outlast the fold:
-        // keep reading past the stop signal until at least one read
-        // completed (bounded), so the liveness assert below cannot flake
-        val deadline = System.currentTimeMillis + 120000
-        while ((!stopReader.get() || okReads.get() == 0L) &&
-            wrong.get() == -1L && System.currentTimeMillis < deadline) {
-          try {
-            val n = AnnStreaming.readStore(spark, store).count()
-            if (n == total) okReads.incrementAndGet()
-            else wrong.compareAndSet(-1L, n)
-          } catch { case _: Throwable => () }
-        }
-      })
-      reader.start()
+      // expose a missing-batches intermediate, and no read may fail
+      val reader = new StoreReader(spark, store, total)
       val stats = try AnnStreaming.consolidateStore(spark, store)
-        finally { stopReader.set(true); reader.join(150000) }
+        finally reader.finish()
       assert(!stats.skipped && stats.rows == 200L, s"$stats")
-      assert(wrong.get() == -1L,
-        s"a concurrent reader saw a partial store: ${wrong.get()} rows")
-      assert(okReads.get() >= 1L, "the concurrent reader never completed")
-      assert(AnnStreaming.manifest(spark, store).get == Set(-2L, 2L))
-      val names = new java.io.File(store).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-        .map(_.getName).sorted.toSeq
-      assert(names == Seq("ingest_batch=-2", "ingest_batch=2"), s"$names")
+      reader.check()
+      assert(AnnStreaming.manifest(spark, store) == Set(-2L, 2L))
       assert(AnnStreaming.readStore(spark, store)
         .collect().map(_.toString).sorted.toSeq == contentBefore)
       assert(VectorOps.serveFromStorePath(spark, store, queries, cents, k,
@@ -156,7 +124,7 @@ class StreamingManifestSpec extends SparkSpec {
       // keeps absorbing; a second fold walks the consolidated id down
       land(300, 400); land(400, 450)
       assert(!AnnStreaming.consolidateStore(spark, store).skipped)
-      assert(AnnStreaming.manifest(spark, store).get == Set(-3L, 4L),
+      assert(AnnStreaming.manifest(spark, store) == Set(-3L, 4L),
         "the second fold must use a fresh consolidated id")
       assert(AnnStreaming.readStore(spark, store).count() == 450L)
     } finally q.stop()
@@ -179,7 +147,6 @@ class StreamingManifestSpec extends SparkSpec {
         q.processAllAvailable()
       }
       land(0, 100); land(100, 200); land(200, 300)
-      AnnStreaming.enableManifest(spark, store)
       var landedInWindow = false
       AnnStreaming.consolidateCrashpoint = s =>
         if (s == "verified" && !landedInWindow) {
@@ -189,7 +156,7 @@ class StreamingManifestSpec extends SparkSpec {
       val stats = try AnnStreaming.consolidateStore(spark, store)
         finally AnnStreaming.consolidateCrashpoint = _ => ()
       assert(landedInWindow && !stats.skipped && stats.rows == 200L)
-      assert(AnnStreaming.manifest(spark, store).get == Set(-2L, 2L, 3L),
+      assert(AnnStreaming.manifest(spark, store) == Set(-2L, 2L, 3L),
         "the mid-fold landing must keep its manifest entry across the swap")
       assert(AnnStreaming.readStore(spark, store).count() == 400L,
         "the mid-fold landing or a folded batch was lost")
@@ -201,13 +168,12 @@ class StreamingManifestSpec extends SparkSpec {
     }
   }
 
-  test("retainSources: the pre-fold snapshot stays readable until the vacuum") {
-    // snapshot retention: with retainSources the fold swaps the manifest
-    // but leaves the source dirs in place — invisible to every NEW reader,
-    // still readable by a scan that planned against the pre-swap manifest
-    // (the table-format retention posture). The vacuum IS
-    // recoverConsolidation, which deletes exactly the fold's recorded
-    // sources.
+  test("fold sources are retained until the next fold or recovery") {
+    // snapshot retention: the fold swaps the manifest but leaves its
+    // source dirs in place — invisible to every NEW reader, still readable
+    // by a scan that planned against the pre-swap manifest (the
+    // table-format retention posture, one version deep). The next fold's
+    // vacuum, or a recovery pass, deletes exactly the recorded sources.
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
@@ -221,31 +187,28 @@ class StreamingManifestSpec extends SparkSpec {
         q.processAllAvailable()
       }
       land(0, 100); land(100, 200); land(200, 300)
-      AnnStreaming.enableManifest(spark, store)
-      val stats = AnnStreaming.consolidateStore(spark, store,
-        retainSources = true)
+      // a scan planned against the pre-fold manifest
+      val preFold = AnnStreaming.readStore(spark, store)
+      val stats = AnnStreaming.consolidateStore(spark, store)
       assert(!stats.skipped && stats.rows == 200L)
-      assert(AnnStreaming.manifest(spark, store).get == Set(-2L, 2L))
+      assert(AnnStreaming.manifest(spark, store) == Set(-2L, 2L))
       assert(AnnStreaming.readStore(spark, store).count() == 300L)
-      // the retained snapshot: source dirs still on disk and readable by
-      // an old-manifest scan, while new readers never see them
-      for (id <- Seq(0L, 1L))
-        assert(new java.io.File(store, s"ingest_batch=$id").isDirectory,
-          s"retained source ingest_batch=$id must stay on disk")
-      val oldSnapshot = spark.read.option("basePath", store)
-        .parquet(s"$store/ingest_batch=0", s"$store/ingest_batch=1")
-      assert(oldSnapshot.count() == 200L,
-        "a pre-swap reader's files must remain readable until the vacuum")
-      // the vacuum deletes exactly the fold's recorded sources
-      AnnStreaming.recoverConsolidation(spark, store)
-      val onDisk = new java.io.File(store).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-        .map(_.getName.stripPrefix("ingest_batch=").toLong).toSet
-      assert(onDisk == Set(-2L, 2L),
-        s"the vacuum must remove the retained sources, left: $onDisk")
-      assert(AnnStreaming.readStore(spark, store).count() == 300L)
+      assert(onDisk(store) == Set(-2L, 0L, 1L, 2L),
+        "the fold's sources must stay on disk, un-manifested")
+      assert(preFold.count() == 300L,
+        "a pre-swap reader's files must remain readable after the fold")
+      // the second fold vacuums the first fold's sources and retains its own
       land(300, 350)
+      assert(!AnnStreaming.consolidateStore(spark, store).skipped)
+      assert(AnnStreaming.manifest(spark, store) == Set(-3L, 3L))
+      assert(onDisk(store) == Set(-3L, -2L, 2L, 3L), s"${onDisk(store)}")
+      // recovery is the same vacuum
+      AnnStreaming.recoverConsolidation(spark, store)
+      assert(onDisk(store) == Set(-3L, 3L),
+        s"the vacuum must remove the retained sources, left: ${onDisk(store)}")
       assert(AnnStreaming.readStore(spark, store).count() == 350L)
+      land(350, 400)
+      assert(AnnStreaming.readStore(spark, store).count() == 400L)
     } finally q.stop()
   }
 
@@ -269,9 +232,7 @@ class StreamingManifestSpec extends SparkSpec {
         q.processAllAvailable()
       }
       land(0, 100); land(100, 200); land(200, 300)
-      // the stream auto-manifested the fresh store (round-14 posture) —
-      // enableManifest on it is an idempotent no-op returning current ids
-      assert(AnnStreaming.enableManifest(spark, store) == Set(0L, 1L, 2L))
+      assert(AnnStreaming.manifest(spark, store) == Set(0L, 1L, 2L))
       // interleave: when the FOLD reaches its commit's read→create window,
       // a fresh batch lands and manifests FIRST (winning the version file);
       // the fold must lose the CAS, re-read, re-apply — never clobber
@@ -289,22 +250,18 @@ class StreamingManifestSpec extends SparkSpec {
       assert(fires.get() == 3,
         s"expected the fold to lose the CAS once and retry (3 commit " +
           s"attempts), saw ${fires.get()}")
-      assert(AnnStreaming.manifest(spark, store).get == Set(-2L, 2L, 3L),
+      assert(AnnStreaming.manifest(spark, store) == Set(-2L, 2L, 3L),
         "the manifest must carry BOTH the fold id and the raced landing id")
       assert(AnnStreaming.readStore(spark, store).count() == 400L,
         "zero row loss across the raced commits")
-      // recovery finds nothing reachable to vacuum: the fold dir is
-      // manifested, the landing dir is manifested, sources were swept
+      // recovery vacuums only the fold's retained sources: the fold dir
+      // and the raced landing's dir are both manifested
       AnnStreaming.recoverConsolidation(spark, store)
       assert(AnnStreaming.readStore(spark, store).count() == 400L)
-      val onDisk = new java.io.File(store).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-        .map(_.getName.stripPrefix("ingest_batch=").toLong).toSet
-      assert(onDisk == Set(-2L, 2L, 3L), s"$onDisk")
+      assert(onDisk(store) == Set(-2L, 2L, 3L), s"${onDisk(store)}")
       // and the counts recorded through the race are the true ones
-      // (every landing carried one — the store was manifested from birth)
-      assert(AnnStreaming.manifestEntries(spark, store).get
-        == Map(-2L -> Some(200L), 2L -> Some(100L), 3L -> Some(100L)))
+      assert(AnnStreaming.manifestEntries(spark, store)
+        == Map(-2L -> 200L, 2L -> 100L, 3L -> 100L))
       land(400, 450)
       assert(AnnStreaming.readStore(spark, store).count() == 450L)
     } finally {
@@ -327,44 +284,25 @@ class StreamingManifestSpec extends SparkSpec {
     val b1 = embRaw.filter(col("vec_id") >= 100 && col("vec_id") < 200)
     val st = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(st, b0, 0L, store, cents)
-    AnnStreaming.enableManifest(spark, store)
     AnnStreaming.absorbStoreBatch(st, b1, 1L, store, cents)
-    assert(AnnStreaming.manifest(spark, store).get == Set(0L, 1L))
+    assert(AnnStreaming.manifest(spark, store) == Set(0L, 1L))
     val dir1 = new java.io.File(store, "ingest_batch=1")
     def listing() = dir1.listFiles().map(f =>
       (f.getName, f.lastModified())).sorted.toSeq
     val before = listing()
-    val entriesBefore = AnnStreaming.manifestEntries(spark, store).get
+    val entriesBefore = AnnStreaming.manifestEntries(spark, store)
     // the crash-window replay, with a reader hammering the whole store —
     // its ONLY legal count is the full 200
-    val wrong = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val okReads = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stopReader = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val reader = new Thread(() => {
-      // read past the stop signal until one read completed (bounded) so
-      // the liveness assert cannot flake on a loaded machine
-      val deadline = System.currentTimeMillis + 120000
-      while ((!stopReader.get() || okReads.get() == 0L) &&
-          wrong.get() == -1L && System.currentTimeMillis < deadline) {
-        try {
-          val n = AnnStreaming.readStore(spark, store).count()
-          if (n == 200L) okReads.incrementAndGet()
-          else wrong.compareAndSet(-1L, n)
-        } catch { case _: Throwable => () }
-      }
-    })
-    reader.start()
+    val reader = new StoreReader(spark, store, 200L)
     val stAfterCrash = try {
       val s = AnnStreaming.stateFromStore(spark, store)
       AnnStreaming.absorbStoreBatch(s, b1, 1L, store, cents) // the replay
       s
-    } finally { stopReader.set(true); reader.join(150000) }
-    assert(wrong.get() == -1L,
-      s"a reader caught a partial store during the replay: ${wrong.get()}")
-    assert(okReads.get() >= 1L, "the concurrent reader never completed")
+    } finally reader.finish()
+    reader.check()
     assert(listing() == before,
       "the replayed manifested landing must not be rewritten — same files")
-    assert(AnnStreaming.manifestEntries(spark, store).get == entriesBefore)
+    assert(AnnStreaming.manifestEntries(spark, store) == entriesBefore)
     assert(stAfterCrash.maxSeenId == 199L)
     // the stream keeps absorbing normally after the skipped replay
     val b2 = embRaw.filter(col("vec_id") >= 200 && col("vec_id") < 250)
@@ -376,9 +314,6 @@ class StreamingManifestSpec extends SparkSpec {
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    // the recovery gate sits at the very top of recoverConsolidation —
-    // BEFORE the manifest branch — so the fence covers manifested stores
-    // (all new streamed stores since round 14) and pre-upgrade ones alike
     val (in, store) = freshPaths("lease")
     val q = AnnStreaming.runIvfStoreAppendStream(spark, in, embRaw.schema,
       store, new AnnStreaming.StoreAppendState, cents)
@@ -389,13 +324,13 @@ class StreamingManifestSpec extends SparkSpec {
         q.processAllAvailable()
       }
       land(0, 100); land(100, 200); land(200, 300)
-      // inside the live park/commit window: recovery must refuse loudly
-      // (it would roll back the live run's parks), and so must a stream
+      // inside the live fold window: recovery must refuse loudly (it would
+      // vacuum the live run's placed fold dir), and so must a stream
       // restart (it calls recoverConsolidation first) and a second
       // consolidator (acquireLease)
       @volatile var checked = false
       AnnStreaming.consolidateCrashpoint = s =>
-        if (s.startsWith("parked:") && !checked) {
+        if (s == "placed" && !checked) {
           checked = true
           val e1 = intercept[IllegalStateException] {
             AnnStreaming.recoverConsolidation(spark, store)
@@ -422,16 +357,17 @@ class StreamingManifestSpec extends SparkSpec {
         .getFileSystem(spark.sessionState.newHadoopConf())
       val lease = new org.apache.hadoop.fs.Path(store, "_consolidating_dead")
       fs.create(lease, false).close()
-      // park a dir by hand so recovery has something it WOULD touch
-      val live = new java.io.File(store, "ingest_batch=2")
-      assert(live.renameTo(new java.io.File(store,
-        ".old_deadtok.ingest_batch=2")))
+      // plant a dead run's placed fold dir (un-manifested, token inside)
+      // so recovery has something it WOULD delete
+      val crashed = new java.io.File(store, "ingest_batch=-9")
+      assert(crashed.mkdir() &&
+        new java.io.File(crashed, "_commit_deadtok").createNewFile())
       val e3 = intercept[IllegalStateException] {
         AnnStreaming.recoverConsolidation(spark, store)
       }
       assert(e3.getMessage.contains("LIVE"))
-      assert(new java.io.File(store, ".old_deadtok.ingest_batch=2").exists(),
-        "the fenced recovery must not have touched the park")
+      assert(crashed.isDirectory,
+        "the fenced recovery must not have touched the dead run's fold dir")
       val e4 = intercept[IllegalStateException] {
         AnnStreaming.runIvfStoreAppendStream(spark, in, embRaw.schema,
           store, new AnnStreaming.StoreAppendState, cents)
@@ -443,10 +379,11 @@ class StreamingManifestSpec extends SparkSpec {
         System.currentTimeMillis - AnnStreaming.DefaultLeaseStaleMs - 1, -1)
       AnnStreaming.recoverConsolidation(spark, store)
       assert(!fs.exists(lease), "a stale lease must be cleared")
-      assert(new java.io.File(store, "ingest_batch=2").isDirectory,
-        "recovery past the stale lease must roll the park back")
+      assert(!crashed.exists(),
+        "recovery past the stale lease must vacuum the dead run's fold dir")
+      assert(onDisk(store) == AnnStreaming.manifest(spark, store))
       land(300, 350)
-      assert(spark.read.parquet(store).count() == 350L)
+      assert(AnnStreaming.readStore(spark, store).count() == 350L)
     } finally {
       AnnStreaming.consolidateCrashpoint = _ => ()
       q.stop()
@@ -466,15 +403,13 @@ class StreamingManifestSpec extends SparkSpec {
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
     val store = freshPaths("lock")._2
     val st = new AnnStreaming.StoreAppendState
-    val (mfs, mp) = (new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf()),
-      new org.apache.hadoop.fs.Path(store))
-    graft.sources.StoreManifest.bootstrap(mfs, mp)
+    val mfs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     for (i <- 0 to 2)
       AnnStreaming.absorbStoreBatch(st,
         embRaw.filter(col("vec_id") >= i * 100 && col("vec_id") < (i + 1) * 100),
         i.toLong, store, cents)
-    val entriesBefore = AnnStreaming.manifestEntries(spark, store).get
+    val entriesBefore = AnnStreaming.manifestEntries(spark, store)
     val lock = new org.apache.hadoop.fs.Path(store, "_consolidating_lock")
     AnnStreaming.consolidateCrashpoint = s =>
       if (s == "lease-precreate" && !mfs.exists(lock))
@@ -483,13 +418,13 @@ class StreamingManifestSpec extends SparkSpec {
         AnnStreaming.consolidateStore(spark, store)
       } finally AnnStreaming.consolidateCrashpoint = _ => ()
     assert(e.getMessage.contains("LIVE"), e.getMessage)
-    assert(AnnStreaming.manifestEntries(spark, store).get == entriesBefore,
+    assert(AnnStreaming.manifestEntries(spark, store) == entriesBefore,
       "the losing consolidator must leave the store untouched")
     assert(AnnStreaming.readStore(spark, store).count() == 300L)
     // the competing run "finishes" (lock released): consolidation proceeds
     mfs.delete(lock, false)
     assert(!AnnStreaming.consolidateStore(spark, store).skipped)
-    assert(AnnStreaming.manifest(spark, store).get == Set(-2L, 2L))
+    assert(AnnStreaming.manifest(spark, store) == Set(-2L, 2L))
     assert(AnnStreaming.readStore(spark, store).count() == 300L)
   }
 
@@ -509,24 +444,21 @@ class StreamingManifestSpec extends SparkSpec {
       // the sf0.001 embeddings fixture holds exactly ids 0..499 — stay
       // inside it (an out-of-range slice lands an EMPTY batch that skips)
       land(0, 50); land(50, 100); land(100, 150)
-      // round-14 posture: the fresh store was auto-manifested before its
-      // first landing, so every batch carries its count from birth
-      // (bootstrap-over-existing-dirs None counts are covered by
-      // StoreManifestSpec)
-      assert(AnnStreaming.manifestEntries(spark, store).get
-        == Map(0L -> Some(50L), 1L -> Some(50L), 2L -> Some(50L)))
+      // every batch carries its count from its landing
+      assert(AnnStreaming.manifestEntries(spark, store)
+        == Map(0L -> 50L, 1L -> 50L, 2L -> 50L))
       land(150, 200)
       assert(AnnStreaming.manifestEntries(spark, store).get(3L)
         == Some(50L))
-      // fold 1: every source counted — the sum audit binds from the start
+      // fold 1: the fold's entry carries the sum of its sources' counts
       assert(!AnnStreaming.consolidateStore(spark, store).skipped)
-      assert(AnnStreaming.manifestEntries(spark, store).get
-        == Map(-2L -> Some(150L), 3L -> Some(50L)))
-      // fold 2: every source counted — the sum audit is BINDING
+      assert(AnnStreaming.manifestEntries(spark, store)
+        == Map(-2L -> 150L, 3L -> 50L))
+      // fold 2: the sum audit binds on a prior fold's count too
       land(200, 250); land(250, 300)
       assert(!AnnStreaming.consolidateStore(spark, store).skipped)
-      val entries2 = AnnStreaming.manifestEntries(spark, store).get
-      assert(entries2 == Map(-3L -> Some(250L), 5L -> Some(50L)), s"$entries2")
+      val entries2 = AnnStreaming.manifestEntries(spark, store)
+      assert(entries2 == Map(-3L -> 250L, 5L -> 50L), s"$entries2")
       // corrupt a recorded count: the next fold must refuse BEFORE its
       // swap, sources untouched
       val (mfs, mp) = (new org.apache.hadoop.fs.Path(store)
@@ -534,7 +466,7 @@ class StreamingManifestSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(store))
       land(300, 350)
       graft.sources.StoreManifest.commit(mfs, mp,
-        e => e.updated(-3L, Some(999L)))
+        e => e.updated(-3L, 999L))
       val e = intercept[IllegalStateException] {
         AnnStreaming.consolidateStore(spark, store)
       }
@@ -544,12 +476,12 @@ class StreamingManifestSpec extends SparkSpec {
       // restore the true count: the fold and its audit pass, and recovery
       // preserves the entries
       graft.sources.StoreManifest.commit(mfs, mp,
-        e => e.updated(-3L, Some(250L)))
+        e => e.updated(-3L, 250L))
       assert(!AnnStreaming.consolidateStore(spark, store).skipped)
-      val entries3 = AnnStreaming.manifestEntries(spark, store).get
-      assert(entries3 == Map(-4L -> Some(300L), 6L -> Some(50L)), s"$entries3")
+      val entries3 = AnnStreaming.manifestEntries(spark, store)
+      assert(entries3 == Map(-4L -> 300L, 6L -> 50L), s"$entries3")
       AnnStreaming.recoverConsolidation(spark, store)
-      assert(AnnStreaming.manifestEntries(spark, store).get == entries3,
+      assert(AnnStreaming.manifestEntries(spark, store) == entries3,
         "recovery must not disturb the recorded counts")
       assert(AnnStreaming.readStore(spark, store).count() == 350L)
     } finally q.stop()
@@ -567,7 +499,6 @@ class StreamingManifestSpec extends SparkSpec {
     val (mfs, mp) = (new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sessionState.newHadoopConf()),
       new org.apache.hadoop.fs.Path(store))
-    graft.sources.StoreManifest.bootstrap(mfs, mp) // manifested from birth
     val st = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(st,
       embRaw.filter(col("vec_id") < 100), 0L, store, cents)
@@ -578,7 +509,7 @@ class StreamingManifestSpec extends SparkSpec {
     AnnStreaming.runIvfStoreAppendStream(spark, in, embRaw.schema, store,
       new AnnStreaming.StoreAppendState, cents).stop()
     // corrupt one recorded count: the restart must refuse loudly
-    graft.sources.StoreManifest.commit(mfs, mp, e => e.updated(1L, Some(999L)))
+    graft.sources.StoreManifest.commit(mfs, mp, e => e.updated(1L, 999L))
     val e = intercept[IllegalStateException] {
       AnnStreaming.runIvfStoreAppendStream(spark, in, embRaw.schema, store,
         new AnnStreaming.StoreAppendState, cents)
@@ -588,7 +519,7 @@ class StreamingManifestSpec extends SparkSpec {
     // store keeps absorbing (batchId continues the store's own numbering —
     // a fresh un-checkpointed stream would restart at 0 and classify as a
     // replay, by contract)
-    graft.sources.StoreManifest.commit(mfs, mp, e => e.updated(1L, Some(100L)))
+    graft.sources.StoreManifest.commit(mfs, mp, e => e.updated(1L, 100L))
     AnnStreaming.runIvfStoreAppendStream(spark, in, embRaw.schema, store,
       new AnnStreaming.StoreAppendState, cents).stop()
     AnnStreaming.absorbStoreBatch(st,
@@ -598,7 +529,7 @@ class StreamingManifestSpec extends SparkSpec {
   }
 
   test("stateFromStore asymmetry: lastBatchId from directories (a torn landing drives its own replay), maxSeenId from the manifest") {
-    // round-13 verdict item 7: deriving lastBatchId from the MANIFEST
+    // deriving lastBatchId from the MANIFEST
     // would classify a torn landing's replay as fresh — the classify path
     // sees its ids already in... nothing (torn rows are invisible), so it
     // double-appends once the replay lands under a new batchId. The
@@ -615,7 +546,6 @@ class StreamingManifestSpec extends SparkSpec {
     val b2 = embRaw.filter(col("vec_id") >= 200 && col("vec_id") < 300)
     val st = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(st, b0, 0L, store, cents)
-    AnnStreaming.enableManifest(spark, store)
     AnnStreaming.absorbStoreBatch(st, b1, 1L, store, cents)
     // the torn landing: batch 2's rows fully renamed into place, crash
     // BEFORE the manifest commit — exactly absorbStoreBatch's one
@@ -633,58 +563,9 @@ class StreamingManifestSpec extends SparkSpec {
     // the restart replays batchId 2: rewrite + manifest, zero loss, zero
     // double-append
     AnnStreaming.absorbStoreBatch(rebuilt, b2, 2L, store, cents)
-    assert(AnnStreaming.manifest(spark, store).get == Set(0L, 1L, 2L))
+    assert(AnnStreaming.manifest(spark, store) == Set(0L, 1L, 2L))
     assert(AnnStreaming.readStore(spark, store).count() == 300L)
     assert(rebuilt.maxSeenId == 299L)
-  }
-
-  test("bootstrap under a live landing: a batch that read 'no manifest' self-commits after its rename") {
-    // the round-14 bootstrap race: a legacy store is bootstrapped into a
-    // manifest (consolidateStore on a pre-upgrade store) while a landing is
-    // mid-flight. The landing read "no manifest" at entry; the bootstrap's
-    // listing ran before the landing's rename — so neither side would have
-    // committed the id, and the batch's rows became permanently invisible.
-    // Closed from both sides: the landing RE-READS the manifest after its
-    // rename and self-commits, and bootstrap's additive list→commit loop
-    // repeats until a fresh listing is covered.
-    val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
-    val cents = VectorOps
-      .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val store = freshPaths("bootrace")._2
-    val st = new AnnStreaming.StoreAppendState
-    // a LEGACY store: absorbStoreBatch alone never creates a manifest
-    AnnStreaming.absorbStoreBatch(st,
-      embRaw.filter(col("vec_id") < 100), 0L, store, cents)
-    assert(AnnStreaming.manifest(spark, store).isEmpty,
-      "precondition: the store must still be legacy (no manifest)")
-    // interleave: batch 1's landing reads "no manifest", and BEFORE its
-    // staging write the bootstrap runs — its listing sees only batch 0
-    @volatile var bootstrapped = Set.empty[Long]
-    AnnStreaming.landCrashpoint = s =>
-      if (s == "read-manifest:1") {
-        val (mfs, mp) = (new org.apache.hadoop.fs.Path(store)
-          .getFileSystem(spark.sessionState.newHadoopConf()),
-          new org.apache.hadoop.fs.Path(store))
-        bootstrapped = graft.sources.StoreManifest.bootstrap(mfs, mp)
-      }
-    try AnnStreaming.absorbStoreBatch(st,
-        embRaw.filter(col("vec_id") >= 100 && col("vec_id") < 200),
-        1L, store, cents)
-      finally AnnStreaming.landCrashpoint = _ => ()
-    assert(bootstrapped == Set(0L),
-      s"the seam must have bootstrapped from the pre-rename listing: " +
-        s"$bootstrapped")
-    assert(AnnStreaming.manifest(spark, store).get == Set(0L, 1L),
-      "the landing that read 'no manifest' must self-commit its id")
-    assert(AnnStreaming.manifestEntries(spark, store).get(1L) == Some(100L),
-      "the self-commit must carry the landing's row count")
-    assert(AnnStreaming.readStore(spark, store).count() == 200L,
-      "the raced batch's rows must be visible — not a permanently torn dir")
-    // and the landing after the race is a plain manifested landing
-    AnnStreaming.absorbStoreBatch(st,
-      embRaw.filter(col("vec_id") >= 200 && col("vec_id") < 250),
-      2L, store, cents)
-    assert(AnnStreaming.readStore(spark, store).count() == 250L)
   }
 
   test("manifested fold crash shapes all recover to zero loss and identical serving") {
@@ -701,19 +582,18 @@ class StreamingManifestSpec extends SparkSpec {
         q.processAllAvailable()
       }
       land(0, 100); land(100, 200); land(200, 300)
-      AnnStreaming.enableManifest(spark, store)
       assert(!AnnStreaming.consolidateStore(spark, store).skipped)
       var hi = 300L
       val queries = VectorOps.prepEmb(embRaw).filter(col("vec_id") < nQueries)
         .localCheckpoint()
       // pre-swap crash shapes leave the OLD manifest and roll the fold
-      // away; post-swap shapes ("manifested", first park) keep the NEW one
-      // and finish its cleanup — a post-swap crash commits the fold, so
-      // each iteration re-creates a foldable state (>= 2 non-newest ids)
-      // by landing fresh batches
-      val killAt = Seq("verified", "placed", "manifested", "parked:")
+      // away; the post-swap shape ("manifested") keeps the NEW one and
+      // recovery vacuums its sources — a post-swap crash commits the fold,
+      // so each iteration re-creates a foldable state (>= 2 non-newest
+      // ids) by landing fresh batches
+      val killAt = Seq("verified", "placed", "manifested")
       for (step <- killAt) {
-        while (AnnStreaming.manifest(spark, store).get.size < 3) {
+        while (AnnStreaming.manifest(spark, store).size < 3) {
           land(hi, hi + 50); hi += 50
         }
         val total = hi
@@ -734,12 +614,9 @@ class StreamingManifestSpec extends SparkSpec {
           k, nprobe).collect().toSeq == servedBefore,
           s"serving diverged after a crash at '$step'")
         // no loss and no leak: on-disk dirs == manifested ids
-        val ids = AnnStreaming.manifest(spark, store).get
-        val onDisk = new java.io.File(store).listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("ingest_batch="))
-          .map(_.getName.stripPrefix("ingest_batch=").toLong).toSet
-        assert(onDisk == ids,
-          s"dirs ($onDisk) must equal the manifest ($ids) after '$step'")
+        val ids = AnnStreaming.manifest(spark, store)
+        assert(onDisk(store) == ids,
+          s"dirs (${onDisk(store)}) must equal the manifest ($ids) after '$step'")
       }
       // after the final post-swap recovery the fold is live; the stream
       // keeps absorbing on the recovered layout

@@ -29,14 +29,11 @@ class StreamingRecoverySpec extends SparkSpec {
   private val (numHashes, bands, shingleLen, threshold) = (64, 8, 5, 0.8)
   private val (nlist, trainIters, nQueries, k, nprobe) = (16, 2, 50, 3, 4)
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_recovery_$tag").toString
-
   test("near-dedup: kill between batches, restart from checkpoint + persisted state") {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
       .orderBy("doc_id").localCheckpoint()
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
-    val base = tmp("dedup")
+    val base = tempDir("dedup")
     val (inputDir, ckpt, stateDir) = (s"$base/in", s"$base/ckpt", s"$base/state")
     new java.io.File(inputDir).mkdirs()
 
@@ -120,7 +117,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val maxId = embRaw.agg(max("vec_id")).head().getLong(0)
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
-    val base = tmp("ivf")
+    val base = tempDir("ivf")
     val (inputDir, ckpt, storePath) = (s"$base/in", s"$base/ckpt", s"$base/store")
     new java.io.File(inputDir).mkdirs()
 
@@ -175,12 +172,12 @@ class StreamingRecoverySpec extends SparkSpec {
     val b1 = embRaw.filter(col("vec_id") < 100)
     val b2 = embRaw.filter(col("vec_id") >= 100 && col("vec_id") < 200)
 
-    def storeRows(path: String) = spark.read.parquet(path)
-      .select(col("vec_id"), col("cluster").cast("long")).collect()
+    def storeRows(path: String) = AnnStreaming.readStore(spark, path)
+      .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
     // once-played reference
-    val cleanStore = tmp("ivf_once") + "/store"
+    val cleanStore = tempDir("ivf_once") + "/store"
     val sClean = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(sClean, b1, 0L, cleanStore, cents)
     AnnStreaming.absorbStoreBatch(sClean, b2, 1L, cleanStore, cents)
@@ -188,7 +185,7 @@ class StreamingRecoverySpec extends SparkSpec {
     assert(once.size == 200 && once.map(_._1).distinct.size == 200)
 
     // replay-twice: crash after batch 1 landed, Spark re-invokes batchId 1
-    val replayStore = tmp("ivf_replay") + "/store"
+    val replayStore = tempDir("ivf_replay") + "/store"
     val sReplay = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(sReplay, b1, 0L, replayStore, cents)
     AnnStreaming.absorbStoreBatch(sReplay, b2, 1L, replayStore, cents)
@@ -198,13 +195,17 @@ class StreamingRecoverySpec extends SparkSpec {
     assert(storeRows(replayStore) == once,
       "replaying a batchId twice must leave the store byte-equal to once")
 
-    // partial landing: the crashed attempt wrote only half of batch 1's
-    // rows; the replay must REPLACE the partial landing, not append to it
-    val healStore = tmp("ivf_heal") + "/store"
+    // partial landing: the crashed attempt left only half of batch 1's
+    // rows in place and never committed them; the replay must REPLACE the
+    // partial landing, not append to it
+    val healStore = tempDir("ivf_heal") + "/store"
     val sHeal0 = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(sHeal0, b1, 0L, healStore, cents)
-    AnnStreaming.absorbStoreBatch(sHeal0,
-      b2.filter(col("vec_id") < 150), 1L, healStore, cents) // partial write
+    VectorOps.assignWithVectors(
+        VectorOps.prepEmb(b2.filter(col("vec_id") < 150)), cents)
+      .select(col("vec_id"), col("v"), col("nrm"), col("cluster"))
+      .write.partitionBy("cluster")
+      .parquet(s"$healStore/ingest_batch=1") // partial write
     val sHeal = AnnStreaming.stateFromStore(spark, healStore)
     assert(sHeal.lastBatchId == 1L,
       "a partial landing must still be visible as the last batch id")
@@ -224,7 +225,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
     def slice(lo: Long, hi: Long) =
       docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
-    val stateDir = tmp("dedup_torn") + "/state"
+    val stateDir = tempDir("dedup_torn") + "/state"
 
     val s1 = DedupStreaming.emptyState(spark, docs, numHashes, shingleLen)
     DedupStreaming.absorbBatch(s1, slice(-1, maxId / 2))
@@ -265,7 +266,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
     def slice(lo: Long, hi: Long) =
       docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
-    val stateDir = tmp("dedup_redeliver") + "/state"
+    val stateDir = tempDir("dedup_redeliver") + "/state"
 
     val s1 = DedupStreaming.emptyState(spark, docs, numHashes, shingleLen)
     assert(DedupStreaming.absorbBatch(s1, slice(-1, maxId / 2)))
@@ -295,7 +296,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
       .orderBy("doc_id").localCheckpoint()
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
-    val stateDir = tmp("dedup_noop_persist") + "/state"
+    val stateDir = tempDir("dedup_noop_persist") + "/state"
     val s1 = DedupStreaming.emptyState(spark, docs, numHashes, shingleLen)
     assert(DedupStreaming.absorbBatch(s1,
       docs.filter(col("doc_id") <= maxId / 2)))
@@ -314,7 +315,7 @@ class StreamingRecoverySpec extends SparkSpec {
     // persisting the same loaded state to a DIFFERENT dir is a copy/backup
     // that retires none of the files the frames read — it must write, not
     // silently skip, and the backup must be independently loadable
-    val backupDir = tmp("dedup_noop_persist_backup") + "/state"
+    val backupDir = tempDir("dedup_noop_persist_backup") + "/state"
     assert(DedupStreaming.persistState(s2, backupDir),
       "a loaded-state persist to a different dir is a backup and must write")
     assert(DedupStreaming.loadState(spark, backupDir).storeSig.count()
@@ -337,69 +338,57 @@ class StreamingRecoverySpec extends SparkSpec {
       == docs.count(), "a stray 'v' directory must be ignored, not parsed")
   }
 
-  test("IVF store: a batch-built (top-level cluster=) store is refused, and migration makes it appendable") {
+  test("IVF store: the batch-built seed takes appends and folds") {
     val embRaw = Tables.embeddings(spark, dir).localCheckpoint()
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
     val b1 = embRaw.filter(col("vec_id") < 100)
     val b2 = embRaw.filter(col("vec_id") >= 100 && col("vec_id") < 200)
-    val storePath = tmp("ivf_legacy") + "/store"
+    val storePath = tempDir("ivf_seeded") + "/store"
 
-    // seed a batch-built store: the postingStorePath layout (cluster= at
-    // the top level)
-    VectorOps.assignWithVectors(VectorOps.prepEmb(b1), cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(storePath)
+    // seed the store the way the batch build does: batch -1 through the
+    // stream's own landing step
+    AnnStreaming.landBatch(spark, storePath, -1L)(
+      VectorOps.assignWithVectors(VectorOps.prepEmb(b1), cents))
 
-    // the append stream must refuse the mixed-depth trap up front
-    val ex = intercept[IllegalStateException] {
-      AnnStreaming.runIvfStoreAppendStream(spark, s"$storePath/__no_in",
-        embRaw.schema, storePath, new AnnStreaming.StoreAppendState, cents)
-    }
-    assert(ex.getMessage.contains("batch-built"))
-
-    // migration is pure renames; afterwards the high-water mark reflects
-    // the seeded ids (no double-append window) and appends compose
-    AnnStreaming.migrateBatchBuiltStore(spark, storePath)
+    // the high-water mark reflects the seeded ids (no double-append
+    // window) and appends compose
     val st = AnnStreaming.stateFromStore(spark, storePath)
     assert(st.lastBatchId == -1L && st.maxSeenId == 99L,
-      "migrated store must report its seeded ids as absorbed")
+      "a seeded store must report its seeded ids as absorbed")
     AnnStreaming.absorbStoreBatch(st, b2, 0L, storePath, cents)
-    val stored = spark.read.parquet(storePath)
-      .select(col("vec_id"), col("cluster").cast("long")).collect()
+    def stored() = AnnStreaming.readStore(spark, storePath)
+      .select(col("vec_id"), col("cluster")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val batchAssign = VectorOps
       .nearestCentroid(VectorOps.prepEmb(
         embRaw.filter(col("vec_id") < 200)), cents)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stored == batchAssign,
-      "append onto the migrated store diverged from the batch assignment")
-    // and a redelivery of the seeded corpus under a new batchId skips
-    val before = stored.size
+    assert(stored() == batchAssign,
+      "append onto the seeded store diverged from the batch assignment")
+    // and a redelivery of the seed corpus under a new batchId skips
     AnnStreaming.absorbStoreBatch(st, b1, 1L, storePath, cents)
-    assert(spark.read.parquet(storePath).count() == before,
-      "a redelivery of the migrated seed corpus must skip, not double-append")
+    assert(AnnStreaming.readStore(spark, storePath).count() == 200L,
+      "a redelivery of the seed corpus must skip, not double-append")
 
-    // maintenance composes with the migrated layout: the -1 seed landing
-    // is older than the newest streamed batch, so consolidation folds it
-    // (and any older batches) into -2 while keeping the newest landing,
-    // delivery state, and serving identical
+    // maintenance composes with the seed: the -1 landing is older than the
+    // newest streamed batch, so consolidation folds it (and any older
+    // batches) into -2 while keeping the newest landing, delivery state,
+    // and serving identical
     val b3 = embRaw.filter(col("vec_id") >= 200 && col("vec_id") < 300)
     AnnStreaming.absorbStoreBatch(st, b3, 2L, storePath, cents)
-    val contentBefore = spark.read.parquet(storePath).drop("ingest_batch")
+    val contentBefore = AnnStreaming.readStore(spark, storePath)
       .collect().map(_.toString).sorted.toSeq
     val cstats = AnnStreaming.consolidateStore(spark, storePath)
     assert(!cstats.skipped && cstats.batchDirsAfter == 2,
       s"expected the seed + older batch folded into [-2, newest]: $cstats")
-    val names = new java.io.File(storePath).listFiles()
-      .filter(_.getName.startsWith("ingest_batch=")).map(_.getName).sorted
-    assert(names.toSeq == Seq("ingest_batch=-2", "ingest_batch=2"), names.toSeq)
-    assert(spark.read.parquet(storePath).drop("ingest_batch")
+    assert(AnnStreaming.manifest(spark, storePath) == Set(-2L, 2L))
+    assert(AnnStreaming.readStore(spark, storePath)
       .collect().map(_.toString).sorted.toSeq == contentBefore,
-      "consolidating a migrated store changed its content")
+      "consolidating a seeded store changed its content")
     val st2 = AnnStreaming.stateFromStore(spark, storePath)
     assert(st2.lastBatchId == 2L && st2.maxSeenId == 299L,
-      "delivery state diverged after consolidating the migrated store")
+      "delivery state diverged after consolidating the seeded store")
   }
 
   test("IVF store: a crashed mid-landing write is invisible to readers and swept at restart") {
@@ -412,7 +401,7 @@ class StreamingRecoverySpec extends SparkSpec {
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
     val b1 = embRaw.filter(col("vec_id") < 100)
     val b2 = embRaw.filter(col("vec_id") >= 100 && col("vec_id") < 200)
-    val base = tmp("ivf_atomic")
+    val base = tempDir("ivf_atomic")
     val storePath = s"$base/store"
     val st = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(st, b1, 0L, storePath, cents)
@@ -446,7 +435,7 @@ class StreamingRecoverySpec extends SparkSpec {
     val cents = VectorOps
       .persistedTrainedCentroids(spark, dir, nlist, trainIters)
     val b1 = embRaw.filter(col("vec_id") < 50)
-    val storePath = tmp("ivf_dup") + "/store"
+    val storePath = tempDir("ivf_dup") + "/store"
     val st = new AnnStreaming.StoreAppendState
     AnnStreaming.absorbStoreBatch(st, b1, 0L, storePath, cents)
     // replay of batchId 0 arrives CORRUPTED with a duplicated id — the
