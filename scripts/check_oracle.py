@@ -93,6 +93,10 @@ def main():
                 shown += 1
                 if shown >= 3:
                     break
+    dumped = {p.name for p in out_dir.iterdir() if p.is_dir()}
+    for name in sorted(set(oracle) - dumped):
+        n_mismatch += 1
+        print(f"✗ {name}: no dump (the query failed in Verify)")
     print(f"\n{n_match} match, {n_mismatch} mismatch, {n_noracle} rows-only")
     sys.exit(1 if n_mismatch else 0)
 

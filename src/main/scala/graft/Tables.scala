@@ -1,10 +1,20 @@
 package graft
 
+import java.nio.file.{FileSystems, Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver testdata tables (TESTDATA.md).
+import scala.jdk.CollectionConverters._
+
+/** Loaders for the testdata tables (TESTDATA.md), and the one
+  * place that keys and publishes what is derived from them.
+  *
+  * Build-once artifacts (signature stores, quantizers, ANN indexes, format
+  * copies) live at `/tmp/<family>/<md5 of key>/`, and scalar statistics
+  * sit in one per-JVM [[memo]]. Both take a [[Key]] from [[key]], the only
+  * rule for when derived state is stale.
   *
   * `events.ts` has shipped in two parquet encodings across testdata
   * generations: TIMESTAMP(NANOS) — which Spark reads as a raw nanosecond
@@ -47,14 +57,9 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame =
     normalizeEventTs(load(s, d, "events"))
 
-  /** Cheap content fingerprint of one fixture table — total parquet byte
-    * size + newest file mtime. Folded into memo keys and every /tmp
-    * artifact key so a fixture REGENERATED at the same path invalidates
-    * persisted state (signature stores, trained quantizers, cached counts)
-    * instead of silently serving stale artifacts. Filesystem metadata only —
-    * no Spark job. One definition for every call site (sig store, routing
-    * statistic, quantizer) so the invalidation semantics cannot drift. */
-  def fixtureToken(dir: String, table: String): String = {
+  /** Cheap content fingerprint of one fixture table: total parquet byte
+    * size + newest file mtime. Filesystem metadata only, no Spark job. */
+  private def fixtureToken(dir: String, table: String): String = {
     val root = new java.io.File(s"$dir/$table.parquet")
     val files: Seq[java.io.File] =
       if (root.isDirectory) root.listFiles().toSeq.filter(_.isFile)
@@ -62,65 +67,80 @@ object Tables {
     s"${files.map(_.length).sum}-${files.map(_.lastModified).foldLeft(0L)(math.max)}"
   }
 
-  private val codeTokenCache =
-    scala.collection.concurrent.TrieMap.empty[Class[_], String]
+  /** md5 over every class file of the `graft` package under `root` (a
+    * classes directory or a jar), in path order. */
+  private[graft] def engineTokenOf(root: Path): String = {
+    val jar = if (Files.isDirectory(root)) None else Some(FileSystems.newFileSystem(root))
+    try {
+      val base = jar.fold(root)(_.getPath("/"))
+      val walk = Files.walk(base.resolve("graft"))
+      val md = java.security.MessageDigest.getInstance("MD5")
+      try walk.iterator().asScala.map(base.relativize(_).toString)
+        .filter(_.endsWith(".class")).toSeq.sorted.foreach { name =>
+          md.update(name.getBytes("UTF-8"))
+          md.update(Files.readAllBytes(base.resolve(name)))
+        }
+      finally walk.close()
+      md.digest().map("%02x".format(_)).mkString
+    } finally jar.foreach(_.close())
+  }
 
-  /** md5 (truncated) of `owner`'s compiled class bytes, memoized. Folded
-    * into persisted-artifact keys so EDITING the builder's defining class
-    * invalidates its /tmp artifacts automatically — a manual version tag
-    * only invalidates when someone remembers to bump it, and a stale
-    * artifact makes tests green-light code they never executed.
-    * Over-invalidates (any edit to the class rebuilds its artifacts once) —
-    * the safe direction; builder logic living in OTHER classes still needs
-    * a manual tag bump, so keep params + a version in the key too. */
-  def codeToken(owner: Class[_]): String =
-    codeTokenCache.getOrElseUpdate(owner, {
-      val res = owner.getName.replace('.', '/') + ".class"
-      val in = owner.getClassLoader.getResourceAsStream(res)
-      if (in == null) "no-classfile"
-      else
-        try {
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val buf = new Array[Byte](8192)
-          var n = in.read(buf)
-          while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-          md.digest().map("%02x".format(_)).mkString.take(12)
-        } finally in.close()
-    })
+  /** [[engineTokenOf]] the class-path entry this engine was loaded from,
+    * computed once per JVM. */
+  lazy val engineToken: String = engineTokenOf(
+    Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
 
-  /** Build-once parquet artifact: materializes `build` the first time this
-    * exact `key` is seen under `/tmp/<family>/`, reads it back on every
-    * later use (the index-build-time posture: nightly artifacts are built
-    * once and served, never recomputed per query). The _SUCCESS marker
-    * gates against a partial write. Callers fold [[fixtureToken]] (input
-    * invalidation) and [[codeToken]] (builder invalidation) into `key`. */
-  def persistedArtifact(s: SparkSession, family: String, key: String)
+  /** What a build-once artifact or scalar memo depends on; made only by
+    * [[key]]. */
+  final class Key private[Tables] (val id: String)
+
+  /** The one key rule for every build-once artifact and memo. It folds the
+    * fixture dir, the [[fixtureToken]] of each input table (a fixture
+    * regenerated at the same path rebuilds), the [[engineToken]] (any
+    * engine edit rebuilds: a builder's output also depends on the kernels
+    * and helpers it calls, which a per-class token cannot see) and the
+    * call's parameters. */
+  def key(dir: String, tables: Seq[String], params: Any*): Key =
+    new Key((Seq(dir) ++ tables.map(t => s"$t=${fixtureToken(dir, t)}") ++
+      Seq(engineToken) ++ params.map(String.valueOf)).mkString("|"))
+
+  private val memos = scala.collection.concurrent.TrieMap.empty[String, Long]
+
+  /** A scalar statistic (a collected count or max) computed once per
+    * `key`, so a query build pays its job once per fixture. */
+  def memo(key: Key)(compute: => Long): Long =
+    memos.getOrElseUpdate(key.id, compute)
+
+  /** The directory the artifact (`family`, `key`) is published at. */
+  def artifactDir(family: String, key: Key): String =
+    s"/tmp/$family/${graft.sources.LocalFs.md5Hex(key.id)}"
+
+  /** Build-once parquet artifact: materializes `build` the first time
+    * `key` is seen under `/tmp/<family>/` and reads it back on every later
+    * use (the index-build-time posture: built once and served, never
+    * recomputed per query). */
+  def persistedArtifact(s: SparkSession, family: String, key: Key)
       (build: => DataFrame): DataFrame =
     s.read.parquet(persistedArtifactPath(s, family, key)(build))
 
-  /** The directory a build-once artifact of (`family`, `key`) lives in. */
-  def artifactDir(family: String, key: String): String =
-    s"/tmp/$family/${graft.sources.LocalFs.md5Hex(key)}"
-
-  /** [[persistedArtifact]] returning the on-disk PATH instead of a read —
-    * for artifacts whose directory LAYOUT is part of the contract (e.g. a
-    * `partitionBy` posting store whose serving plan must see the partition
-    * columns). `partitionBy` columns become hive-style directory keys; the
-    * reader re-infers their types, so callers cast them back explicitly. */
-  def persistedArtifactPath(s: SparkSession, family: String, key: String,
-      partitionBy: Seq[String] = Nil, format: String = "parquet")
-      (build: => DataFrame): String = {
-    // the layout is part of the artifact's identity: the same (family, key)
-    // requested with a different partitionBy or format must NOT serve the
-    // previously-written directory with the wrong structure
-    val path = artifactDir(family,
-      s"$key|layout=${partitionBy.mkString(",")}|fmt=$format")
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      val w = build.write.mode("overwrite").format(format)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .save(path)
+  /** [[persistedArtifact]] returning the published PATH, written in
+    * `format`. `build` is written to a staging sibling under the family dir
+    * and published with one directory rename, so the path holds a whole
+    * artifact or nothing. A builder whose rename loses to a concurrent one
+    * discards its copy and serves the winner's. */
+  def persistedArtifactPath(s: SparkSession, family: String, key: Key,
+      format: String = "parquet")(build: => DataFrame): String = {
+    val dest = new java.io.File(artifactDir(family, new Key(s"${key.id}|$format")))
+    if (!dest.isDirectory) {
+      val staging = new java.io.File(dest.getParentFile,
+        s".${dest.getName}.${java.util.UUID.randomUUID}")
+      try {
+        build.write.format(format).save(staging.getPath)
+        if (!staging.renameTo(dest) && !dest.isDirectory)
+          throw new java.io.IOException(s"could not publish $staging as $dest")
+      } finally graft.sources.LocalFs.deleteRecursively(staging)
     }
-    path
+    dest.getPath
   }
 
   /** Canonicalize `ts` to ns-since-epoch long + add the µs `ts_utc` view,

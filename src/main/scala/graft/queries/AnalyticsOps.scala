@@ -25,27 +25,24 @@ object AnalyticsOps {
     * day that stops true VISIBLE (capped_customers > 0) instead of silent. */
   val CoshareCap = 1024
 
-  /** Supplier-dimension row count, memoized per (dir, file token): the
-    * coshare routing statistic is read once per fixture instead of running
-    * a scan-and-count Spark job on every g2 query construction (including
-    * plan-only/explain paths). Real job on first touch — cheap because the
-    * dimension is tiny — then filesystem-metadata-keyed cache hits; a
-    * regenerated fixture at the same path changes the token and re-counts. */
-  private val suppCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  /** Supplier-dimension row count, memoized per fixture ([[Tables.memo]]):
+    * the coshare routing statistic is read once per fixture instead of
+    * running a scan-and-count Spark job on every g2 query construction
+    * (including plan-only/explain paths). Real job on first touch — cheap
+    * because the dimension is tiny. */
   def supplierCount(s: SparkSession, dir: String): Long =
     supplierCountOf(Tables.supplier(s, dir),
-      s"$dir|${Tables.fixtureToken(dir, "supplier")}")
+      Tables.key(dir, Seq("supplier"), "supplier-count"))
 
   /** The same statistic over ANY supplier-dimension frame — the seam that
     * lets a deployment hand g2's routing an ANALYZE'd catalog table
     * (CardinalityStatsSpec pins that path at zero jobs) while the
     * fixture-path callers keep the memoized-count fallback. */
-  def supplierCountOf(dim: DataFrame, memoKey: String): Long =
+  def supplierCountOf(dim: DataFrame, memoKey: Tables.Key): Long =
     // catalog statistics first (graft.plans.CardinalityStats — an ANALYZE'd
     // deployment routes with zero jobs), memoized count as the fallback
     graft.plans.CardinalityStats.rowCount(dim)(
-      suppCountCache.getOrElseUpdate(memoKey, dim.count()))
+      Tables.memo(memoKey)(dim.count()))
 
   /** Distinct customer→supplier posting list, pre-partitioned on customer so
     * dedup / cap-window / self-join all ride one hash exchange. */
@@ -116,24 +113,11 @@ object AnalyticsOps {
     * nightly-index-build posture), and both join sides plus the pair-count
     * statistic read it back as plain parquet scans — repeated scans of one
     * materialized table are the normal relational shape PlanLint
-    * deliberately does not flag. Keyed on both input fixtures + the
-    * builder's class bytes, so a regenerated fixture or an edited builder
-    * re-materializes instead of serving stale rows. */
-  /** ONE key string for the capped-posting artifact AND every memo derived
-    * from it (advisory finding, round 11: the pair-count memo key omitted
-    * the orders fixture and builder-code tokens the artifact key carried,
-    * so a regenerated orders fixture rebuilt the artifact but served a
-    * stale pair count, mis-sizing the big-route exchange — one shared
-    * definition makes the invalidation semantics unable to drift). */
-  private def cappedPostingKey(dir: String, cap: Int): String =
-    s"$dir|$cap|${Tables.fixtureToken(dir, "orders")}" +
-      s"|${Tables.fixtureToken(dir, "lineitem")}" +
-      s"|${Tables.codeToken(AnalyticsOps.getClass)}|v1"
-
+    * deliberately does not flag. */
   def cappedPostingArtifact(s: SparkSession, dir: String,
       cap: Int): DataFrame =
     Tables.persistedArtifact(s, "graft_coshare_capped",
-      cappedPostingKey(dir, cap)) {
+      Tables.key(dir, Seq("orders", "lineitem"), "capped", cap)) {
       cappedPosting(custSupp(s, dir), cap)
     }
 
@@ -141,14 +125,9 @@ object AnalyticsOps {
     * Σ d·(d−1)/2 over capped degrees, the statistic that sizes the big
     * route's exchange in [[coshareTop]]. One aggregate job per fixture
     * (over the [[cappedPostingArtifact]], so the posting list is never
-    * recomputed for the statistic), memoized like [[supplierCount]]
-    * (keyed on the lineitem fixture token, so a regenerated fixture
-    * re-counts). */
-  private val pairCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+    * recomputed for the statistic), memoized like [[supplierCount]]. */
   def cosharePairCount(s: SparkSession, dir: String, cap: Int): Long =
-    pairCountCache.getOrElseUpdate(
-      cappedPostingKey(dir, cap),
+    Tables.memo(Tables.key(dir, Seq("orders", "lineitem"), "pairs", cap))(
       cappedPostingArtifact(s, dir, cap)
         .groupBy("c").agg(count(lit(1)).as("d"))
         .agg(coalesce(sum(expr("(d * (d - 1)) div 2")), lit(0L)))

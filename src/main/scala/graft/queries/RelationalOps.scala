@@ -704,8 +704,8 @@ object RelationalOps {
     QueryDef("j16_bucketed_revenue",
       (s, dir) => {
         def bkt(table: String, bucketCol: String, df: DataFrame) =
-          BucketedStore.ensure(s, table,
-            s"$dir|${Tables.fixtureToken(dir, table)}|v1", bucketCol, 16)(df)
+          BucketedStore.ensure(s, table, Tables.key(dir, Seq(table)),
+            bucketCol, 16)(df)
         val li = bkt("lineitem", "l_orderkey", Tables.lineitem(s, dir))
         val ord = bkt("orders", "o_orderkey", Tables.orders(s, dir))
         li.hint("merge").join(ord.hint("merge"),
@@ -895,7 +895,7 @@ object RelationalOps {
     QueryDef("s11_orc_scan",
       (s, dir) => {
         val path = Tables.persistedArtifactPath(s, "graft_fmt",
-          s"$dir|${Tables.fixtureToken(dir, "lineitem")}|v1", format = "orc")(
+          Tables.key(dir, Seq("lineitem")), format = "orc")(
           Tables.lineitem(s, dir))
         s.read.orc(path)
           .filter(col("l_shipdate") >= lit("1998-01-01").cast("timestamp"))
@@ -924,7 +924,7 @@ object RelationalOps {
     QueryDef("s12_json_scan",
       (s, dir) => {
         val path = Tables.persistedArtifactPath(s, "graft_fmt",
-          s"$dir|${Tables.fixtureToken(dir, "events")}|v1", format = "json")(
+          Tables.key(dir, Seq("events")), format = "json")(
           Tables.events(s, dir)
             .select("event_id", "user_id", "event_type", "value"))
         s.read.schema(

@@ -40,42 +40,30 @@ object TextOps {
     * batch 99% of a 10× corpus, turning the incremental rows into full
     * runs). Integer arithmetic, identical in both engines; the oracle
     * computes the same value via a scalar subquery. One bounded (1-row)
-    * driver-side max per construction, memoized per sf dir. */
-  private val cutoffCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+    * collected max per fixture ([[Tables.memo]]). */
   private def storeCutoff(s: SparkSession, dir: String): Long =
-    cutoffCache.getOrElseUpdate(s"$dir|${docsToken(dir)}",
+    Tables.memo(Tables.key(dir, Seq("documents"), "store-cutoff"))(
       docs(s, dir).agg(max("doc_id")).head().getLong(0) * 4 / 5)
 
-  /** Cheap content fingerprint of the documents table, for the cutoff memo
-    * and every /tmp artifact key — see [[Tables.fixtureToken]] (one shared
-    * definition; round-5 advice: the md5(dir|params|version) key alone
-    * keyed only on the path). */
-  private def docsToken(dir: String): String =
-    Tables.fixtureToken(dir, "documents")
   private val cutoffSql = "(SELECT max(doc_id) * 4 // 5 FROM documents)"
 
   /** Materializes the store-side signature artifact ONCE per (sf dir,
     * params) — the stand-in for the parquet table last night's close wrote —
     * and reads it back, so the measured incremental plan scans signatures,
-    * never historical text. Keyed under /tmp by an md5 of the inputs; the
-    * _SUCCESS marker gates against a partial write. */
+    * never historical text. */
   private def persistedSigStore(s: SparkSession, dir: String,
       store: DataFrame, numHashes: Int, shingleLen: Int): DataFrame =
-    Tables.persistedArtifact(s, "graft_sigstore",
-      s"$dir|${docsToken(dir)}|$numHashes|$shingleLen|store-p80|v2" +
-        s"|${Tables.codeToken(graft.functions.TextFunctions.getClass)}")(
+    Tables.persistedArtifact(s, "graft_sigstore", Tables.key(dir,
+        Seq("documents"), "store-p80", numHashes, shingleLen))(
       signatureTable(store, numHashes, shingleLen))
 
   /** The exact edit-distance pair set `(id_a, id_b, dist)` over the 30-char
     * prefixes, materialized ONCE per (fixture, t) — the pair table a
     * nightly dedup pass writes, which downstream consumers (the audit row,
     * a CC labeling, a removal join) READ rather than re-enumerating the
-    * blocking join per consumer. Output-sized (pairs), keyed on the
-    * documents fixture + t + the builder's code, so a regenerated corpus
-    * or an edited EditBlock re-materializes instead of serving stale
-    * pairs. Since round 13 the exact operator row (e2_edit_blocked) reads
-    * this too (round-12 verdict item 5): the routed row carries the
+    * blocking join per consumer. Output-sized (pairs). Since round 13
+    * the exact operator row (e2_edit_blocked) reads this too (round-12
+    * verdict item 5): the routed row carries the
     * operator's semantics in the steady-state sweep, the exact row is the
     * baseline PROOF whose join belongs in the nightly artifact build (the
     * cold first touch here) — re-running a priced ~500 s join in every
@@ -85,8 +73,7 @@ object TextOps {
   private def persistedNearPairs(s: SparkSession, dir: String,
       t: Int): DataFrame =
     Tables.persistedArtifact(s, "graft_editpairs",
-      s"$dir|${docsToken(dir)}|prefix30|$t" +
-        s"|${Tables.codeToken(graft.operators.EditBlock.getClass)}|v1")(
+      Tables.key(dir, Seq("documents"), "prefix30", t))(
       graft.operators.EditBlock.nearPairs(
         docs(s, dir).select(col("doc_id"),
           substring(col("text"), 1, 30).as("s")),
@@ -97,10 +84,8 @@ object TextOps {
     * over the HISTORICAL (bottom-80% of ids) near-dup pair graph. Read back
     * from parquet so the incremental merge plan never recomputes it. */
   private def persistedClusterLabels(s: SparkSession, dir: String): DataFrame =
-    Tables.persistedArtifact(s, "graft_sigstore",
-      s"$dir|${docsToken(dir)}|cc-labels|64|8|5|0.8|store-p80|v2" +
-        s"|${Tables.codeToken(graft.functions.TextFunctions.getClass)}" +
-        s"|${Tables.codeToken(graft.operators.ConnectedComponents.getClass)}") {
+    Tables.persistedArtifact(s, "graft_sigstore", Tables.key(dir,
+        Seq("documents"), "cc-labels", 64, 8, 5, 0.8, "store-p80")) {
       val storePairs = minhashLshPairs(
         docs(s, dir).filter(col("doc_id") < storeCutoff(s, dir)),
         numHashes = 64, bands = 8, shingleLen = 5, threshold = 0.8)
@@ -1292,8 +1277,7 @@ object TextOps {
     // WROTE — re-enumerating the join to audit its own output doubled the
     // engine's single most expensive 100× cost (~500 s of the 2212 s
     // sweep) for rows the exact operator row already measures. The
-    // artifact is output-sized (pairs, not corpus) and keyed on fixture +
-    // params + builder code, so a regenerated corpus rebuilds it.
+    // artifact is output-sized (pairs, not corpus).
     QueryDef("e2_edit_blocked_audit",
       (s, dir) => EditBlock.pairAudit(
         persistedNearPairs(s, dir, t = 4), budget = 64),

@@ -536,17 +536,14 @@ object VectorOps {
       (s, dir) => {
         // both ground truths are PERSISTED artifacts (the e2_edit_blocked
         // nightly pattern, round-16 verdict item 4): brute force runs ONCE
-        // per (fixture, params, code) and every later run reads the
+        // per `Tables.key` and every later run reads the
         // ≤150-row parquet back — at 100× the truth recomputation was
         // ~100 s of the row's ~123 s, every sweep. Longs round-trip
         // parquet exactly, so the recall numbers (and the DuckDB oracle,
-        // which recomputes truth from scratch in SQL) are unchanged. The
-        // key folds fixtureToken (regenerated fixture → rebuild) and
-        // codeToken (edited trainer/scorer → rebuild).
+        // which recomputes truth from scratch in SQL) are unchanged.
         def truthArtifact(tag: String)(build: => DataFrame): DataFrame =
           broadcast(Tables.persistedArtifact(s, "graft_anntruth",
-            s"$dir|${Tables.fixtureToken(dir, "embeddings")}|$tag|v1" +
-              s"|${Tables.codeToken(getClass)}")(build))
+            Tables.key(dir, Seq("embeddings"), tag))(build))
         val bf3 = truthArtifact("bf3-50-3")(
           bruteForceTopK(s, dir, nQueries = 50, k = 3)
             .select("q_id", "n_id"))
@@ -836,22 +833,17 @@ object VectorOps {
         first(col("v")).as("v"), first(col("nrm")).as("nrm"))
       .select(col("vec_id"), col("v"), col("nrm"), col("cluster"))
 
-  /** A trained quantizer behind a per-(fixture, params, code) parquet
-    * artifact: `build` runs ONCE per fixture (the deployment posture —
-    * codebooks are trained at index-build time and persisted, never per
-    * query), read back broadcast on every subsequent use. Doubles
-    * round-trip parquet exactly, so the served values are bit-identical to
-    * a fresh training run and the oracle replay stays hash-green; the
-    * serving-path cost of the ANN rows is then the probe + re-rank, not
-    * the trainer. The key folds [[Tables.fixtureToken]] (a regenerated
-    * fixture re-trains) AND [[Tables.codeToken]] of this class (an edited
-    * trainer re-trains — a manual version tag alone kept serving stale
-    * centroids until someone remembered to bump it). */
+  /** A trained quantizer behind a build-once parquet artifact: `build`
+    * runs ONCE per fixture (the deployment posture — codebooks are trained
+    * at index-build time and persisted, never per query), read back
+    * broadcast on every subsequent use. Doubles round-trip parquet
+    * exactly, so the served values are bit-identical to a fresh training
+    * run and the oracle replay stays hash-green; the serving-path cost of
+    * the ANN rows is then the probe + re-rank, not the trainer. */
   private def persistedQuantizer(s: SparkSession, dir: String, tag: String)
       (build: => DataFrame): DataFrame =
     broadcast(Tables.persistedArtifact(s, "graft_quantizers",
-      s"$dir|${Tables.fixtureToken(dir, "embeddings")}|$tag|v1" +
-        s"|${Tables.codeToken(getClass)}")(build))
+      Tables.key(dir, Seq("embeddings"), tag))(build))
 
   /** [[trainedCentroids]] behind [[persistedQuantizer]]. `private[graft]`
     * so the streaming ingest path serves the same artifact as e3_ivf_ann. */
@@ -1041,12 +1033,11 @@ object VectorOps {
     * sub-space codeword ids `(vid, j, code)` under the (already
     * persisted) trained codebook — encoding the corpus is index
     * construction, exactly like [[lshIndex]]'s bucket table and the IVF
-    * posting store. Key folds fixture and code tokens. */
+    * posting store. */
   private[graft] def pqIndex(s: SparkSession, dir: String, sub: DataFrame,
       cb: DataFrame, refineIters: Int): DataFrame =
     Tables.persistedArtifact(s, "graft_pq_index",
-      s"$dir|${Tables.fixtureToken(dir, "embeddings")}" +
-        s"|pq-enc|$refineIters|v1|${Tables.codeToken(getClass)}")(
+      Tables.key(dir, Seq("embeddings"), "pq-enc", refineIters))(
       pqEncode(pqDistances(sub, cb)))
 
   /** PQ-ADC serving from the PERSISTED codebook + code table: the
@@ -1138,15 +1129,13 @@ object VectorOps {
   }
 
   /** The training-time distortion baseline for `dir`'s persisted codebook,
-    * itself persisted under the SAME key structure — measured once, read
-    * back on every audit. 8 rows. */
+    * itself persisted — measured once, read back on every audit. 8 rows. */
   def pqBaselineDistortion(s: SparkSession, dir: String,
       refineIters: Int = 1): DataFrame = {
     lazy val sub = pqSub(Tables.embeddings(s, dir)
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v")))
     broadcast(Tables.persistedArtifact(s, "graft_pqbase",
-      s"$dir|${Tables.fixtureToken(dir, "embeddings")}" +
-        s"|pq-baseline|$refineIters|v1|${Tables.codeToken(getClass)}")(
+      Tables.key(dir, Seq("embeddings"), "pq-baseline", refineIters))(
       pqDistortionOf(sub, pqCodebook(s, dir, sub, refineIters))))
   }
 
@@ -1252,8 +1241,8 @@ object VectorOps {
 
   /** The IVF index as it actually lives on disk at scale: posting rows
     * `(vec_id, v, nrm)` partitioned by `cluster`, so each inverted list IS
-    * a parquet partition directory. Built once per (fixture, params, code)
-    * — the same index-build-time posture as [[persistedQuantizer]] — with
+    * a parquet partition directory. Built once per [[Tables.key]] — the
+    * same index-build-time posture as [[persistedQuantizer]] — with
     * the assignment rule shared with the streaming build
     * ([[assignWithVectors]]), and published through the append stream's
     * own landing step as batch −1 (`ingest_batch=-1/cluster=<c>/`): one
@@ -1265,8 +1254,7 @@ object VectorOps {
   private[graft] def postingStorePath(s: SparkSession, dir: String,
       nlist: Int, trainIters: Int): String = {
     val path = Tables.artifactDir("graft_ivf_store",
-      s"$dir|${Tables.fixtureToken(dir, "embeddings")}" +
-        s"|posting-store|$nlist|$trainIters|v2|${Tables.codeToken(getClass)}")
+      Tables.key(dir, Seq("embeddings"), "posting-store", nlist, trainIters))
     graft.streaming.AnnStreaming.landBatch(s, path, -1L)(
       assignWithVectors(emb(s, dir),
         persistedTrainedCentroids(s, dir, nlist, trainIters)))
@@ -1358,16 +1346,12 @@ object VectorOps {
     * `(vec_id, tb)` posting table for `tables × planesPerTable` random
     * hyperplanes — the [[postingStorePath]] pattern applied to the LSH
     * method. Hashing the corpus is index CONSTRUCTION, not serving: it
-    * runs once per (fixture, params, code) and every later serve reads
-    * the two-column posting table back (narrow scan, no plane math). The
-    * key folds fixtureToken (regenerated fixture → rebuild) and codeToken
-    * (edited hash family → rebuild). */
+    * runs once per [[Tables.key]] and every later serve reads the
+    * two-column posting table back (narrow scan, no plane math). */
   private[graft] def lshIndex(s: SparkSession, dir: String,
       tables: Int = 8, planesPerTable: Int = 6): DataFrame =
-    Tables.persistedArtifact(s, "graft_lsh_index",
-      s"$dir|${Tables.fixtureToken(dir, "embeddings")}" +
-        s"|lsh-index|$tables|$planesPerTable|v1" +
-        s"|${Tables.codeToken(getClass)}")(
+    Tables.persistedArtifact(s, "graft_lsh_index", Tables.key(dir,
+        Seq("embeddings"), "lsh-index", tables, planesPerTable))(
       emb(s, dir).select(col("vec_id"),
         explode(lshTableBuckets(col("v"), tables, planesPerTable,
           dim = 64)).as("tb")))

@@ -12,14 +12,13 @@ import org.apache.spark.sql.functions.col
   * with the in-file sort no per-query Sort either.
   *
   * Deployment posture mirrors [[graft.Tables.persistedArtifact]]: the table
-  * is (re)materialized at most once per (process, fixture, layout) — the
-  * index-build-time cost — and served from the session catalog afterwards.
-  * The catalog entry name folds the caller's key (which folds
-  * [[graft.Tables.fixtureToken]]), so a regenerated fixture materializes a
-  * fresh table instead of silently serving stale buckets. `build` is
-  * pre-partitioned on the bucket column so each bucket is exactly ONE file —
-  * the layout Spark requires to serve the join's sort order from the scan
-  * (multi-file buckets keep the no-Exchange property but re-sort per query).
+  * is materialized at most once per (process, [[graft.Tables.Key]], layout)
+  * — the index-build-time cost — and served from the session catalog
+  * afterwards; the catalog name folds the key, so anything that stales the
+  * key materializes a fresh table. `build` is pre-partitioned on the bucket
+  * column so each bucket is exactly ONE file — the layout Spark requires to
+  * serve the join's sort order from the scan (multi-file buckets keep the
+  * no-Exchange property but re-sort per query).
   *
   * Bucket hashing is Spark's own Murmur3 pmod (`HashPartitioning`), i.e. the
   * same function `repartition(n, col)` uses — which is what makes the
@@ -31,10 +30,10 @@ object BucketedStore {
     * most once per (process, `family`, `key`, layout). Thread-safe: suites
     * sharing one session race here, the write happens once.
     */
-  def ensure(s: SparkSession, family: String, key: String,
+  def ensure(s: SparkSession, family: String, key: graft.Tables.Key,
       bucketCol: String, buckets: Int)(build: => DataFrame): DataFrame =
     synchronized {
-      val md5 = LocalFs.md5Hex(s"$key|$bucketCol|$buckets").take(12)
+      val md5 = LocalFs.md5Hex(s"${key.id}|$bucketCol|$buckets").take(12)
       val name = s"graft_bkt_${family}_$md5"
       if (!s.catalog.tableExists(name)) {
         // The in-memory catalog is per-process but the warehouse directory

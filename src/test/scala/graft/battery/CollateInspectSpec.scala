@@ -8,7 +8,7 @@ import graft.SparkSpec
 class CollateInspectSpec extends SparkSpec {
 
   test("featuresFromDir: glob read + filename-derived cell_id") {
-    val dir = java.nio.file.Files.createTempDirectory("collate").toString
+    val dir = tempDir("collate")
     for (cell <- Seq("CELLA", "CELLB")) {
       val f = Features.all(Normalize(spark, resource("arbin_small.csv")), 3.0)
       f.coalesce(1).write.mode("overwrite").option("header", "true")

@@ -14,10 +14,8 @@ class StreamingBatterySpec extends SparkSpec {
     "src/test/resources/neware_small.csv")
 
   test("stream-fed collated features equal the batch collate over the same files") {
-    val rawDir = java.nio.file.Files
-      .createTempDirectory("graft_battery_raw").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_battery_out").toString
+    val rawDir = tempDir("battery_raw")
+    val outDir = tempDir("battery_out")
     val q = StreamingIngest.run(spark, rawDir, outDir)
     try {
       // land the vendor exports one at a time — two different dialects
@@ -54,8 +52,7 @@ class StreamingBatterySpec extends SparkSpec {
       // stream (fresh landing dir + fresh source log, same sink — the
       // restart-after-lost-checkpoint scenario) re-lists arbin_small.csv,
       // finds its cell already committed, and skips it
-      val rawDir2 = java.nio.file.Files
-        .createTempDirectory("graft_battery_raw2").toString
+      val rawDir2 = tempDir("battery_raw2")
       val q2 = StreamingIngest.run(spark, rawDir2, outDir)
       try {
         java.nio.file.Files.copy(
@@ -80,10 +77,8 @@ class StreamingBatterySpec extends SparkSpec {
   }
 
   test("out-of-order samples within a file are absorbed; a late re-export beyond the file boundary is dropped WITH visible row accounting") {
-    val rawDir = java.nio.file.Files
-      .createTempDirectory("graft_battery_late_raw").toString
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_battery_late_out").toString
+    val rawDir = tempDir("battery_late_raw")
+    val outDir = tempDir("battery_late_out")
     // the file-granularity analog of "shuffled within the watermark": the
     // cell's samples arrive out of order INSIDE its export — tolerated,
     // because normalize's global timestamp sort restores event order
@@ -125,8 +120,7 @@ class StreamingBatterySpec extends SparkSpec {
           lateLines.asInstanceOf[Seq[CharSequence]]).asJava)
       // a new landing dir re-delivers the cell (same restart shape as the
       // parity test); the extra-sample re-export is the late arrival
-      val rawDir2 = java.nio.file.Files
-        .createTempDirectory("graft_battery_late_raw2").toString
+      val rawDir2 = tempDir("battery_late_raw2")
       val q2 = StreamingIngest.run(spark, rawDir2, outDir)
       try {
         java.nio.file.Files.move(latePath,

@@ -125,7 +125,7 @@ class DedupSpec extends SparkSpec {
 
   test("span dedup cuts exactly the words covered by a shared 5-gram") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("spandedup").toString
+    val dir = tempDir("spandedup")
     Seq(
       (0L, "alpha beta gamma delta epsilon zeta unique0 tail0"),
       (1L, "head1 alpha beta gamma delta epsilon zeta tail1"),

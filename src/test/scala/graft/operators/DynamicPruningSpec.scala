@@ -14,7 +14,7 @@ class DynamicPruningSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("dim filter prunes fact partitions at runtime (DPP)") {
-    val out = "/tmp/graft_dpp/events_by_type"
+    val out = tempDir("events_by_type")
     val events = Tables.events(spark, dir)
       .select("event_id", "user_id", "event_type", "value")
     events.write.mode("overwrite").partitionBy("event_type").parquet(out)

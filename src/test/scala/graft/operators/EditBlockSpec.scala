@@ -290,8 +290,7 @@ class EditBlockSpec extends SparkSpec {
     // compares. Fixture: one 30-char template stamped 25k times — at the
     // row's real 5×10⁸ budget even τ=1 prices ≈ 2·(25k)² = 1.25×10⁹.
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_refuse_fixture").toString
+    val tmp = tempDir("refuse_fixture")
     (0L until 25000L).map(i => (i, "the same boilerplate, every time"))
       .toDF("doc_id", "text")
       .write.parquet(s"$tmp/documents.parquet")

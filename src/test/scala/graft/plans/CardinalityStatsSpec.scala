@@ -17,8 +17,7 @@ class CardinalityStatsSpec extends SparkSpec {
   }
 
   test("falls back to the caller's count on a stats-less file scan") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cardstats").toString + "/t"
+    val dir = tempDir("cardstats") + "/t"
     spark.range(123).toDF("id").write.parquet(dir)
     val df = spark.read.parquet(dir)
     assert(df.queryExecution.optimizedPlan.stats.rowCount.isEmpty,
@@ -89,7 +88,7 @@ class CardinalityStatsSpec extends SparkSpec {
 
       spark.sparkContext.addSparkListener(listener)
       val n = graft.queries.AnalyticsOps.supplierCountOf(dim,
-        "spec-analyzed-supplier")
+        graft.Tables.key("spec-analyzed-supplier", Nil))
       val marker = s"cardstats-flush-${System.nanoTime()}"
       spark.sparkContext.setJobGroup(marker, "listener flush")
       try spark.range(1).count()

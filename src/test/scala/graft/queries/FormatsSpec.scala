@@ -13,7 +13,7 @@ class FormatsSpec extends SparkSpec {
 
   test("documents round-trip through JSON lines") {
     val docs = Tables.documents(spark, dir).orderBy("doc_id")
-    val out = "/tmp/graft_fmt/docs_json"
+    val out = tempDir("docs_json")
     docs.write.mode("overwrite").json(out)
     val back = spark.read.schema(docs.schema).json(out).orderBy("doc_id")
     assert(back.collect().map(_.toSeq).toSeq ==
@@ -25,7 +25,7 @@ class FormatsSpec extends SparkSpec {
     // not read the payload bytes to answer a query over one meta field —
     // Spark's nested schema pruning pushes the field access into ReadSchema
     val docs = Tables.documents(spark, dir)
-    val out = "/tmp/graft_fmt/docs_nested"
+    val out = tempDir("docs_nested")
     docs.select(col("doc_id"),
         struct(col("lang"), col("n_chars"),
           col("text").as("payload")).as("rec"))
@@ -49,7 +49,7 @@ class FormatsSpec extends SparkSpec {
     // and null-fill the missing column in old files, and a scan WITHOUT the
     // new column must stay cheap (no merge needed to read shared columns)
     val docs = Tables.documents(spark, dir)
-    val out = "/tmp/graft_fmt/docs_evolved"
+    val out = tempDir("docs_evolved")
     docs.select("doc_id", "lang", "n_chars")
       .filter(col("doc_id") < 100)
       .write.mode("overwrite").parquet(s"$out/batch=old")
@@ -70,7 +70,7 @@ class FormatsSpec extends SparkSpec {
 
   test("lineitem aggregates identically from an ORC round-trip") {
     val li = Tables.lineitem(spark, dir)
-    val out = "/tmp/graft_fmt/li_orc"
+    val out = tempDir("li_orc")
     li.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
     assert(back.schema == li.schema)

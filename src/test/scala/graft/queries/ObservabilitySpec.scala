@@ -75,7 +75,7 @@ class ObservabilitySpec extends SparkSpec {
 
   test("zstd parquet round-trips bit-identically (storage codec swap)") {
     val docs = Tables.documents(spark, dir).orderBy("doc_id")
-    val out = "/tmp/graft_fmt/docs_zstd"
+    val out = tempDir("docs_zstd")
     docs.write.mode("overwrite")
       .option("compression", "zstd").parquet(out)
     val files = new java.io.File(out).listFiles()

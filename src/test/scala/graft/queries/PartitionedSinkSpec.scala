@@ -14,7 +14,7 @@ class PartitionedSinkSpec extends SparkSpec {
 
   test("partitionBy(lang) write prunes non-matching partitions on read") {
     val dir = "/root/testdata/sf0.001"
-    val out = "/tmp/graft_part_sink/documents"
+    val out = tempDir("documents")
     val docs = Tables.documents(spark, dir)
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
 

@@ -22,7 +22,7 @@ class PartsuppOpsSpec extends SparkSpec {
 
   /** sf0.001 tables + synthesized partsupp in one temp dir. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_partsupp").toString
+    val d = tempDir("partsupp")
     for (t <- Seq("part", "supplier", "nation", "region", "lineitem"))
       Files.createSymbolicLink(
         Paths.get(s"$d/$t.parquet"), Paths.get(s"$src/$t.parquet"))
@@ -123,8 +123,18 @@ class PartsuppOpsSpec extends SparkSpec {
     assert(unshipped, "fixture lost the empty-correlated-sum case")
   }
 
+  private def withFullPaths[T](body: => T): T = {
+    val key = "spark.sql.maxMetadataStringLength"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1000")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("both plans are lint-clean, dims broadcast, partsupp scanned once") {
-    for ((name, df) <- Seq(
+    // the scan count reads file paths off the plan string, so render them
+    // whole: the suite's temp path is longer than the default 100-char cut
+    withFullPaths(for ((name, df) <- Seq(
         "q2" -> PartsuppOps.q2MinCostSupplier(spark, dir),
         "q20" -> PartsuppOps.q20ExcessStock(spark, dir))) {
       val findings = graft.plans.PlanLint.audit(df)
@@ -136,6 +146,6 @@ class PartsuppOpsSpec extends SparkSpec {
       // against a second copy of the view is the shape they exist to avoid
       val psScans = "partsupp\\.parquet".r.findAllIn(plan).size
       assert(psScans == 1, s"$name scans partsupp $psScans times:\n$plan")
-    }
+    })
   }
 }

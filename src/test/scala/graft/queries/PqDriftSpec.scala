@@ -90,8 +90,7 @@ class PqDriftSpec extends SparkSpec {
     // RESPONSE: retrain on the drifted corpus through the real persisted
     // path (pqCodebook over a written fixture — the artifact key folds
     // the fixture token, so the refreshed data replaces the artifact)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pq_drift").toString
+    val dir = tempDir("pq_drift")
     (popA ++ popB).toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val cb2 = VectorOps.pqCodebook(spark, dir, subDrift, refineIters = 1)

@@ -48,7 +48,7 @@ import graft.plans.PlanLint
   */
 class ScaleCatalogLintSpec extends SparkSpec {
 
-  private val dir = "/root/repo/scale_sf1"
+  private val dir = new java.io.File("scale_sf1").getAbsolutePath
 
   private def fixturePresent =
     new java.io.File(s"$dir/lineitem.parquet").exists()

@@ -9,8 +9,7 @@ class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   private def fragmented(n: Int, rowsPerFile: Int): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("compact") + "/t"
     for (i <- 0 until n)
       (0 until rowsPerFile).map(j => (i.toLong, s"v${i}_$j"))
         .toDF("part", "v").coalesce(1).write.mode("append").parquet(dir)
@@ -64,8 +63,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("a hive-partitioned directory is compacted per leaf, layout preserved") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_compact_part").toString + "/t"
+    val root = tempDir("compact_part") + "/t"
     // 3 partitions × 10 fragment files × 40 rows
     for (p <- 0 until 3; i <- 0 until 10)
       (0 until 40).map(j => (s"v${p}_${i}_$j"))

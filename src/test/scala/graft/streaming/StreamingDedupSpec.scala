@@ -26,8 +26,7 @@ class StreamingDedupSpec extends SparkSpec {
     // three id-ordered micro-batches (the crawl-feed arrival contract)
     val cuts = Seq(maxId / 3, 2 * maxId / 3, maxId + 1)
 
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_dedup").toString
+    val inputDir = tempDir("stream_dedup")
     val state = DedupStreaming.emptyState(spark, docs, numHashes, shingleLen)
     val q = DedupStreaming.runNearDedupStream(spark, inputDir, docs.schema,
       state, numHashes, bands, shingleLen, threshold)
@@ -80,8 +79,7 @@ class StreamingDedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
       .localCheckpoint()
     val maxId = docs.agg(max("doc_id")).head().getLong(0)
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_ooo").toString
+    val inputDir = tempDir("stream_ooo")
     val state = DedupStreaming.emptyState(spark, docs, numHashes, shingleLen)
     val q = DedupStreaming.runNearDedupStream(spark, inputDir, docs.schema,
       state, numHashes, bands, shingleLen, threshold)
@@ -104,8 +102,7 @@ class StreamingDedupSpec extends SparkSpec {
   test("a doc_id duplicated WITHIN one micro-batch fails loudly too") {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
       .localCheckpoint()
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_intra").toString
+    val inputDir = tempDir("stream_intra")
     val state = DedupStreaming.emptyState(spark, docs, numHashes, shingleLen)
     val q = DedupStreaming.runNearDedupStream(spark, inputDir, docs.schema,
       state, numHashes, bands, shingleLen, threshold)

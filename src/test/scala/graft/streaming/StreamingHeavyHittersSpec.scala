@@ -26,10 +26,8 @@ class StreamingHeavyHittersSpec extends SparkSpec {
       (0 until 750).map(i => s"c${b}_$i")).map(k => (b.toLong, k))
 
   test("stream-fed sketch + exact confirm == one batch run, state stays ≤ k") {
-    val inputDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_hh_in").toString
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("graft_stream_hh_corpus").toString + "/corpus"
+    val inputDir = tempDir("stream_hh_in")
+    val corpusDir = tempDir("stream_hh_corpus") + "/corpus"
     val template = batchRows(0).toDF("batch", "k")
     val state = HeavyHittersStreaming.emptyState(minFrac)
     val q = HeavyHittersStreaming.runHeavyHitterStream(spark, inputDir,
@@ -80,8 +78,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     // sketch was empty, so confirmed() missed every pre-restart heavy
     // hitter. runHeavyHitterStream must now detect the landed corpus ahead
     // of the state's lastBatchId and rebuild the sketch before starting.
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_stream_hh_restart").toString
+    val base = tempDir("stream_hh_restart")
     val (inputDir, corpusDir, ckpt) =
       (s"$base/in", s"$base/corpus", s"$base/ckpt")
     new java.io.File(inputDir).mkdirs()

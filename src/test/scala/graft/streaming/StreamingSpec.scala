@@ -60,12 +60,7 @@ class StreamingSpec extends SparkSpec {
     // not raw events — so the count assert is on the finalized window.
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val src = "/tmp/graft_stream_late"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(src))
+    val src = tempDir("stream_late")
     val t0 = 1700000000000000L // µs
     def mk(rows: Seq[(Long, Long)]) = rows
       .toDF("user_id", "us")
